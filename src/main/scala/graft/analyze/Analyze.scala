@@ -15,8 +15,7 @@ import graft.core.{ColumnProfile, InferredType, TableOverride}
   * the reference's sample: at 100 TB a sample-inferred INT column with a
   * stray string at row 10^9 would poison the load; full-scan inference is
   * one pass, partial-aggregated, and makes the inferred schema a guarantee
-  * rather than a guess (SURVEY §1.2 note). Sample values are still capped
-  * at 10 per column for the audit trail.
+  * rather than a guess (SURVEY §1.2 note).
   */
 object Analyze {
 
@@ -57,11 +56,11 @@ object Analyze {
   private def isAbsent(c: Column): Column =
     c.isNull || trim(c) === "" || lower(trim(c)) === "nan"
 
-  /** One-pass whole-table profile: for each string column emit
-    * max length, null presence, forall-int / forall-decimal / forall-datetime
-    * (counting convention: #valid == #present), int32 fit, and count. */
-  def profile(df: DataFrame, sampleValues: Map[String, Seq[String]] = Map.empty)
-      : Seq[ColumnProfile] = {
+  /** One-pass whole-table profile: the row count, and for each string
+    * column max length, null presence, forall-int / forall-decimal /
+    * forall-datetime (counting convention: #valid == #present), int32 fit,
+    * and count. `df` must have at least one column. */
+  def profile(df: DataFrame): (Long, Seq[ColumnProfile]) = {
     val cols = df.schema.fields.map(_.name).toSeq
     val aggs: Seq[Column] = cols.flatMap { name =>
       val c = col(name)
@@ -80,9 +79,9 @@ object Analyze {
         sum(when(present && trimmed.try_cast("int").isNotNull, 1L).otherwise(0L))
           .as(s"${name}__int32s"))
     }
-    val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row: Row = df.agg(count(lit(1)).as("__rows"), aggs: _*).head()
     def l(k: String): Long = Option(row.getAs[Any](k)).map(_.toString.toLong).getOrElse(0L)
-    cols.map { name =>
+    l("__rows") -> cols.map { name =>
       val present = l(s"${name}__present")
       ColumnProfile(
         name = name,
@@ -92,8 +91,7 @@ object Analyze {
         allDecimal = present > 0 && l(s"${name}__decs") == present,
         allDatetime = present > 0 && l(s"${name}__dts") == present,
         intFitsInt32 = l(s"${name}__int32s") == l(s"${name}__ints"),
-        nonNullCount = present,
-        sampleValues = sampleValues.getOrElse(name, Nil))
+        nonNullCount = present)
     }
   }
 
@@ -194,15 +192,6 @@ object Analyze {
         col("min_chars"), col("max_chars"))
   }
 
-  /** 10 retained sample values per column (reference :732) — optional audit
-    * companion to `profile`; one small limit-collect. */
-  def sampleValues(df: DataFrame, n: Int = 10): Map[String, Seq[String]] = {
-    val rows = df.limit(n).collect()
-    df.schema.fields.map(_.name).map { name =>
-      name -> rows.map(r => Option(r.getAs[Any](name)).map(_.toString).getOrElse("")).toSeq
-    }.toMap
-  }
-
   /** The 4-type lattice decision (reference :818-846): datetime > int >
     * decimal > varchar(bucketed), with disputed-column length overrides and
     * BIGINT widening (SURVEY §7.4 note 3). */
@@ -246,15 +235,4 @@ object Analyze {
     }
     df.select(cols: _*)
   }
-
-  /** Row-validity predicate: NOT NULL columns must be present after casting
-    * (reference surfaces these as per-row insert errors, C3). */
-  def validityPredicate(types: Seq[(String, InferredType)], notNull: Seq[String]): Column =
-    notNull.foldLeft(lit(true)) { (acc, name) =>
-      types.find(_._1 == name) match {
-        case Some((_, t)) => acc && castColumn(
-          when(isAbsent(col(name)), lit(null)).otherwise(col(name)), t).isNotNull
-        case None => acc
-      }
-    }
 }

@@ -70,8 +70,7 @@ final case class ColumnProfile(
     allDecimal: Boolean,
     allDatetime: Boolean,
     intFitsInt32: Boolean,
-    nonNullCount: Long,
-    sampleValues: Seq[String])
+    nonNullCount: Long)
 
 /** Existing-table handling (reference :908-926). */
 sealed trait TableMode { def name: String }

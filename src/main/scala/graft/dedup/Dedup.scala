@@ -43,7 +43,7 @@ object Dedup {
     // so the cache only deduplicates the sizes/blacklist branches' extra
     // kernel passes — parallel work — while costing a serialized cache
     // population plus re-reads. The one-JVM interleaved A/B
-    // (graft.AbEager conf=graft.cache.shared, 7 reps, sf0.1) measured
+    // (graft.cache.shared on vs off, 7 reps, sf0.1) measured
     // uncached faster on every builder: q19 1.34 vs 1.71 s, q60 3.58 vs
     // 5.91 s, q22 0.79 vs 0.95 s, q21 0.50 vs 0.55 s, q58 a wash. The
     // knob remains for memory-rich saturated clusters where duplicate
@@ -69,12 +69,10 @@ object Dedup {
       q.add(cached)
       q
     })
-    // optional eager materialization (graft.cache.eager, default lazy —
-    // see Relational.eagerPin for the measured A/B): racing consumer
-    // stages CAN duplicate the kernel pass against a lazy cache
-    // (profiled on q60: 4x), but that waste is parallel, and the serial
-    // pinning pass measured slower at both 32 and 8 cores
-    graft.ops.Relational.eagerPin(cached)
+    // populated lazily: racing consumer stages CAN duplicate the kernel
+    // pass against a lazy cache (profiled on q60: 4x), but that waste is
+    // parallel, and an eager count() pass measured slower at both 32 and
+    // 8 cores in an interleaved one-JVM A/B
     cached
   }
 

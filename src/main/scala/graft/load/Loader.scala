@@ -1,12 +1,13 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
-/** The four table modes × two transaction modes as DataFrame programs
-  * (reference dispatch src/file-to-sql-loader.py:947-963; strict insert
-  * :965-1012; tolerant insert :1014-1068; upserts :1169-1270).
+/** The four table modes × two transaction modes as one DataFrame program
+  * (reference dispatch src/file-to-sql-loader.py:947-963; existing-table
+  * handling :908-926; strict insert :965-1012; tolerant insert
+  * :1014-1068; upserts :1169-1270).
   *
   * Semantic restatement (SURVEY §7.4 note 1): the reference aborts a
   * tolerant load after the first `maxRowErrors` failures in file order and
@@ -14,12 +15,36 @@ import graft.core._
   * budget check is `invalidCount > maxRowErrors` over the whole file —
   * deterministic, order-free, and identical on every test the reference
   * ships.
+  *
+  * Outcome of [[load]] for `nBad` invalid rows (`n` rows written; `ins`
+  * and `upd` are the upsert's observed counts). Error-ledger rows are the
+  * bad rows `load` hands back for the ledger and the `logs/` dump; the
+  * file destination is what `ProcessFile` does with the status.
+  *
+  * | table mode                  | txn      | when                 | status                | read / inserted / updated / errored | error-ledger rows | file       |
+  * |-----------------------------|----------|----------------------|-----------------------|-------------------------------------|-------------------|------------|
+  * | fail                        | either   | target exists        | Failed (thrown)       | -1 / 0 / 0 / -1                     | 0                 | error/     |
+  * | any                         | strict   | nBad > 0             | Failed                | -1 / 0 / 0 / nBad                   | 0                 | error/     |
+  * | any                         | tolerant | nBad > maxRowErrors  | Failed                | -1 / 0 / 0 / nBad                   | nBad              | error/     |
+  * | drop_recreate, append, fail | strict   | nBad = 0             | Completed             | n / n / 0 / 0                       | 0                 | processed/ |
+  * | drop_recreate, append, fail | tolerant | nBad ≤ maxRowErrors  | Completed[WithErrors] | n+nBad / n / 0 / nBad               | nBad              | processed/ |
+  * | upsert                      | strict   | nBad = 0             | Completed             | ins+upd / ins / upd / 0             | 0                 | processed/ |
+  * | upsert                      | tolerant | nBad ≤ maxRowErrors  | Completed[WithErrors] | ins+upd+nBad / ins / upd / nBad     | nBad              | processed/ |
+  *
+  * "Completed[WithErrors]" is CompletedWithErrors when nBad > 0. A
+  * rejection changes no table: the gate runs before the drop_recreate
+  * drop. Upsert dedups the good rows last-wins on `_row_idx`; with no
+  * target it inserts them all, otherwise a sink with a native merge (JDBC
+  * MERGE pushdown) takes it, else the full-outer merge is written to
+  * `<table>__upsert_next` and swapped in. The temp-table + rename swap
+  * stands in for an atomic catalog commit (MERGE INTO on a lakehouse
+  * table format at production scale — SURVEY §7.4 note 4).
   */
 object Loader {
 
   /** Validity split: `good` rows satisfy all NOT NULL constraints after
     * casting; `bad` rows violate at least one. */
-  def split(castDf: DataFrame, notNull: Seq[String]): (DataFrame, DataFrame) = {
+  private def split(castDf: DataFrame, notNull: Seq[String]): (DataFrame, DataFrame) = {
     if (notNull.isEmpty) (castDf, castDf.limit(0))
     else {
       val ok = notNull.foldLeft(lit(true))((acc, c) => acc && col(c).isNotNull)
@@ -27,101 +52,63 @@ object Loader {
     }
   }
 
-  /** Existing-table handling (reference handle_existing_table :908-926). */
-  def prepareTable(spark: SparkSession, table: String, mode: TableMode,
-      sink: TableSink = CatalogSink): Unit = mode match {
-    case TableMode.DropRecreate => sink.drop(spark, table)
-    case TableMode.Fail =>
-      if (sink.exists(spark, table))
-        throw new IllegalStateException(s"table $table already exists (table_mode=fail)")
-    case TableMode.Append | TableMode.Upsert => ()
-  }
+  /** Loads the cast rows of one file into `table` under `config`'s table
+    * and transaction modes (see the table above). Returns the result and
+    * the bad rows the error ledger should record, if any. */
+  def load(spark: SparkSession, casted: DataFrame, table: String, config: EngineConfig,
+      sink: TableSink = CatalogSink): (LoadResult, Option[DataFrame]) = {
+    val mode = config.tableMode
+    if (mode == TableMode.Fail && sink.exists(spark, table))
+      throw new IllegalStateException(s"table $table already exists (table_mode=fail)")
 
-  private def saveModeFor(mode: TableMode): SaveMode = mode match {
-    case TableMode.Append => SaveMode.Append
-    case _ => SaveMode.Overwrite
-  }
-
-  /** Strict insert (I6): any invalid row ⇒ whole file rejected. The
-    * existence probe is a limit-1 job, not a full count; the inserted-row
-    * count is observed DURING the write job (no second scan). */
-  def loadStrict(spark: SparkSession, good: DataFrame, bad: DataFrame, table: String,
-      mode: TableMode, sink: TableSink = CatalogSink): LoadResult = {
-    if (!bad.isEmpty)
-      return LoadResult("Failed", -1, 0, 0, -1,
-        Some("validation failed in strict mode: at least one invalid row"))
-    val obs = Observation()
-    sink.write(good.observe(obs, count(lit(1)).as("n")), table, saveModeFor(mode))
-    val rows = obs.get("n").asInstanceOf[Long]
-    LoadResult("Completed", rows, rows, 0, 0)
-  }
-
-  /** Tolerant insert (I7): load valid rows, reject only when the invalid
-    * count blows the budget. The bad side is counted up front (it gates
-    * the write); the good side is observed during the write. */
-  def loadTolerant(spark: SparkSession, good: DataFrame, bad: DataFrame, table: String,
-      mode: TableMode, maxRowErrors: Int, sink: TableSink = CatalogSink): LoadResult = {
+    val (good, bad) = split(casted, config.notNullColumns.getOrElse(table, Nil))
+    val strict = config.transactionMode == TransactionMode.Strict
     val nBad = bad.count()
-    if (nBad > maxRowErrors)
-      return LoadResult("Failed", -1, 0, 0, nBad,
-        Some(s"row errors $nBad exceed budget $maxRowErrors"))
-    val obs = Observation()
-    sink.write(good.observe(obs, count(lit(1)).as("n")), table, saveModeFor(mode))
-    val nGood = obs.get("n").asInstanceOf[Long]
+    val logged = if (strict || nBad == 0) None else Some(bad)
+    if (nBad > (if (strict) 0 else config.maxRowErrors)) {
+      val why =
+        if (strict) "validation failed in strict mode: at least one invalid row"
+        else s"row errors $nBad exceed budget ${config.maxRowErrors}"
+      return (LoadResult("Failed", -1, 0, 0, nBad, Some(why)), logged)
+    }
+
+    if (mode == TableMode.DropRecreate) sink.drop(spark, table)
+    val (ins, upd) =
+      if (mode == TableMode.Upsert) upsert(spark, good, table, config.primaryKeyFor(table), sink)
+      else observedWrite(good.drop("_row_idx"), table,
+        if (mode == TableMode.Append) SaveMode.Append else SaveMode.Overwrite, sink, allRows)
     val status = if (nBad > 0) "CompletedWithErrors" else "Completed"
-    LoadResult(status, nGood + nBad, nGood, 0, nBad)
+    (LoadResult(status, ins + upd + nBad, ins, upd, nBad), logged)
   }
 
-  /** Upsert (I8/I9): dedup-last-wins → full-outer merge → write-temp → swap.
-    * Insert/update counts are observed during the single merge write.
-    * The temp-table + rename swap stands in for an atomic catalog commit
-    * (MERGE INTO on a lakehouse table format at production scale —
-    * SURVEY §7.4 note 4). */
-  def loadUpsert(spark: SparkSession, source: DataFrame, badRows: DataFrame, table: String,
-      pk: Seq[String], ordinalCol: String, strict: Boolean, maxRowErrors: Int,
-      sink: TableSink = CatalogSink): LoadResult = {
-    val nBad = badRows.count()
-    if (strict && nBad > 0)
-      return LoadResult("Failed", -1, 0, 0, nBad,
-        Some("validation failed in strict mode: at least one invalid row"))
-    if (!strict && nBad > maxRowErrors)
-      return LoadResult("Failed", -1, 0, 0, nBad,
-        Some(s"row errors $nBad exceed budget $maxRowErrors"))
+  private def allRows: Column = count(lit(1)).as("ins")
+  private def merged(action: String, name: String): Column =
+    sum(when(col("__merge_action") === action, 1L).otherwise(0L)).as(name)
 
-    val deduped = Upsert.dedupLastWins(source, pk, ordinalCol)
-    val status = if (nBad > 0) "CompletedWithErrors" else "Completed"
-
-    if (!sink.exists(spark, table)) {
-      // no target yet: the merge degenerates to insert-all
-      val obs = Observation()
-      sink.write(deduped.observe(obs, count(lit(1)).as("n")), table, SaveMode.Overwrite)
-      val n = obs.get("n").asInstanceOf[Long]
-      return LoadResult(status, n + nBad, n, 0, nBad)
+  /** dedup-last-wins, then insert-all, native merge, or merge + swap. */
+  private def upsert(spark: SparkSession, good: DataFrame, table: String, pk: Seq[String],
+      sink: TableSink): (Long, Long) = {
+    val deduped = Upsert.dedupLastWins(good, pk, "_row_idx")
+    if (!sink.exists(spark, table))
+      observedWrite(deduped, table, SaveMode.Overwrite, sink, allRows)
+    else sink.mergeUpsert(spark, deduped, table, pk).getOrElse {
+      val next = s"${table}__upsert_next"
+      val counts = observedWrite(Upsert.merge(sink.read(spark, table), deduped, pk), next,
+        SaveMode.Overwrite, sink, merged("inserted", "ins"), merged("updated", "upd"))
+      sink.rename(spark, next, table)
+      counts
     }
+  }
 
-    // sinks with a native server-side merge (JDBC MERGE pushdown) take it:
-    // the full target never crosses the wire, work scales with the batch
-    sink.mergeUpsert(spark, deduped, table, pk) match {
-      case Some((inserted, updated)) =>
-        return LoadResult(status, inserted + updated + nBad, inserted, updated, nBad)
-      case None => ()
-    }
-
-    // insert/update counts are observed DURING the single merge write —
-    // no extra key-join count jobs, no second scan of target or source
-    val target = sink.read(spark, table)
-    val next = s"${table}__upsert_next"
+  /** The load's one write, without the merge's `__merge_action` audit
+    * column; the (inserted, updated) counts named `ins` and `upd` are
+    * observed during that job, so no second scan counts them. */
+  private def observedWrite(df: DataFrame, table: String, mode: SaveMode, sink: TableSink,
+      metrics: Column*): (Long, Long) = {
     val obs = Observation()
-    sink.write(
-      Upsert.merge(target, deduped, pk)
-        .observe(obs,
-          sum(when(col("__merge_action") === "inserted", 1L).otherwise(0L)).as("ins"),
-          sum(when(col("__merge_action") === "updated", 1L).otherwise(0L)).as("upd"))
-        .drop("__merge_action"),
-      next, SaveMode.Overwrite)
-    val inserted = Option(obs.get("ins")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val updated = Option(obs.get("upd")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    sink.rename(spark, next, table)
-    LoadResult(status, inserted + updated + nBad, inserted, updated, nBad)
+    sink.write(df.observe(obs, metrics.head, metrics.tail: _*).drop("__merge_action"),
+      table, mode)
+    def n(k: String): Long = obs.get.get(k).flatMap(Option(_)).fold(0L)(_.asInstanceOf[Long])
+    (n("ins"), n("upd"))
   }
 }

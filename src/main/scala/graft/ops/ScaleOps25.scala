@@ -87,10 +87,8 @@ object ScaleOps25 {
     import s.implicits._
     val w = Array.fill(Q176Buckets + 1)(0L)
     val cached = feats.repartition(col("doc_id")).persist()
-    // the first epoch's job reads cached from TWO branches (margin join
-    // + misclassified re-join); pinning is the measured-lazy eagerPin
-    // routing
-    Relational.eagerPin(cached)
+    // each epoch's job reads cached from TWO branches (margin join +
+    // misclassified re-join)
     try {
       for (_ <- 1 to Q176Epochs) {
         val wDf = w.zipWithIndex

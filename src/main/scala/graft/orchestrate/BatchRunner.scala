@@ -111,17 +111,9 @@ object BatchRunner {
     // unexpected-Throwable guard below
     def failedStub(f: String, err: Option[Throwable]): ProcessFile.FileJob = {
       val r = LoadResult("Failed", -1, 0, 0, -1, err.map(_.getMessage))
-      if (config.jobStatisticsEnabled) {
-        val ts = new java.sql.Timestamp(System.currentTimeMillis())
-        Ledger.writeJobStats(spark, JobStats(
-          JobRunID = java.util.UUID.randomUUID().toString,
-          JobStartTime = ts, JobEndTime = ts, JobDurationSeconds = 0,
-          JobStatus = "Failed", SourceFile = f, TargetTable = "",
-          RowsRead = -1, RowsInserted = 0, RowsUpdated = 0, RowsFailed = -1,
-          ErrorMessage = err.map(_.getMessage), BatchJobID = Some(batchId),
-          TableMode = config.tableMode.name,
-          TransactionMode = config.transactionMode.name))
-      }
+      val ts = new java.sql.Timestamp(System.currentTimeMillis())
+      ProcessFile.recordJob(spark, config, java.util.UUID.randomUUID().toString, ts, ts,
+        f, "", r, Some(batchId))
       ProcessFile.FileJob("", f, "", r, "")
     }
 

@@ -41,8 +41,10 @@ object ProcessFile {
     val overrides = config.overridesFor(stem)
     val table = overrides.overrideTableName.getOrElse(stem)
 
-    // A6: empty input — upsert ⇒ success no-op, others ⇒ fail (:1420-1432)
-    if (raw.isEmpty || raw.columns.isEmpty) {
+    // A6: empty input — upsert ⇒ success no-op, others ⇒ fail (:1420-1432);
+    // the row count rides the profile aggregate, no separate emptiness job
+    val (nRows, profiles) = if (raw.columns.isEmpty) (0L, Nil) else Analyze.profile(raw)
+    if (nRows == 0) {
       val (status, err) =
         if (config.tableMode == TableMode.Upsert) ("Completed", None)
         else ("Failed", Some("empty input file"))
@@ -52,54 +54,32 @@ object ProcessFile {
       return FileJob(jobRunId, filePath, table, result, "")
     }
 
-    val samples = Analyze.sampleValues(raw)
-    val profiles = Analyze.profile(raw, samples)
     val notNull = config.notNullColumns.getOrElse(table, Nil)
     val inferred = Analyze.inferSchema(profiles, overrides, notNull)
     val types = inferred.map { case (p, t, _) => (p.name, t) }
     val ddl = Ddl.render(table, inferred.map { case (p, t, n) => (p.name, t, n) })
 
-    val result =
+    val (result, badRows) =
       try {
-        Loader.prepareTable(spark, table, config.tableMode, sink)
-        val indexed = Reader.withRowIndex(raw)
-        val casted = Analyze.castPlan(indexed,
+        val casted = Analyze.castPlan(Reader.withRowIndex(raw),
           types :+ ("_row_idx" -> InferredType.BigIntType))
-        val (good, bad) = Loader.split(casted, notNull)
-        val strict = config.transactionMode == TransactionMode.Strict
-        config.tableMode match {
-          case TableMode.Upsert =>
-            Loader.loadUpsert(spark, good, bad, table,
-              pk = config.primaryKeyFor(table), ordinalCol = "_row_idx",
-              strict = strict, maxRowErrors = config.maxRowErrors, sink = sink)
-          case m =>
-            val goodOut = good.drop("_row_idx")
-            if (strict) Loader.loadStrict(spark, goodOut, bad, table, m, sink)
-            else Loader.loadTolerant(spark, goodOut, bad, table, m, config.maxRowErrors, sink)
-        }
+        Loader.load(spark, casted, table, config, sink)
       } catch {
         case e: Exception =>
-          LoadResult("Failed", -1, 0, 0, -1, Some(e.getMessage))
+          (LoadResult("Failed", -1, 0, 0, -1, Some(e.getMessage)), None)
       }
 
-    val badForLog =
-      if (result.rowsErrored > 0) {
-        val indexed = Reader.withRowIndex(raw)
-        val casted = Analyze.castPlan(indexed, types :+ ("_row_idx" -> InferredType.BigIntType))
-        Some(Loader.split(casted, notNull)._2)
-      } else None
-
-    finish(spark, filePath, jobRunId, table, start, result, config, batchJobId, badForLog,
+    finish(spark, filePath, jobRunId, table, start, result, config, batchJobId, badRows,
       moveOnFailure)
     FileJob(jobRunId, filePath, table, result, ddl)
   }
 
-  private def finish(spark: SparkSession, filePath: String, jobRunId: String,
-      table: String, start: java.sql.Timestamp, result: LoadResult,
-      config: EngineConfig, batchJobId: Option[String],
-      badRows: Option[DataFrame], moveOnFailure: Boolean = true): Unit = {
-    val end = new java.sql.Timestamp(System.currentTimeMillis())
-
+  /** The one place an EtlJobStatistics row is built (this job's, or the
+    * batch runner's stub for a file whose every attempt threw). */
+  private[orchestrate] def recordJob(spark: SparkSession, config: EngineConfig,
+      jobRunId: String, start: java.sql.Timestamp, end: java.sql.Timestamp,
+      filePath: String, table: String, result: LoadResult,
+      batchJobId: Option[String]): Unit =
     if (config.jobStatisticsEnabled)
       Ledger.writeJobStats(spark, JobStats(
         JobRunID = jobRunId, JobStartTime = start, JobEndTime = end,
@@ -109,6 +89,14 @@ object ProcessFile {
         RowsUpdated = result.rowsUpdated, RowsFailed = result.rowsErrored,
         ErrorMessage = result.errorMessage, BatchJobID = batchJobId,
         TableMode = config.tableMode.name, TransactionMode = config.transactionMode.name))
+
+  private def finish(spark: SparkSession, filePath: String, jobRunId: String,
+      table: String, start: java.sql.Timestamp, result: LoadResult,
+      config: EngineConfig, batchJobId: Option[String],
+      badRows: Option[DataFrame], moveOnFailure: Boolean = true): Unit = {
+    val end = new java.sql.Timestamp(System.currentTimeMillis())
+
+    recordJob(spark, config, jobRunId, start, end, filePath, table, result, batchJobId)
 
     if (config.errorLoggingEnabled) badRows.foreach { bad =>
       val errs = bad.select(
@@ -130,21 +118,25 @@ object ProcessFile {
       }
     }
 
+    // I10: file lifecycle — success ⇒ processed/, failure ⇒ error/
+    // (skipped for non-final retry attempts). The load has committed, so a
+    // file that cannot move is reported, not thrown.
+    val stranded =
+      if (result.status != "Failed") moveFile(spark, filePath, "processed")
+      else if (moveOnFailure) moveFile(spark, filePath, "error")
+      else None
+    stranded.foreach(m => System.err.println(s"$end ERROR $m"))
+
     // J5: per-file log artifact — the greppable processing trace the
     // reference writes via setup_file_specific_logging
     // (src/file-to-sql-loader.py:69-101: process_<stem>_<id>.log in the
     // logs dir next to the source). Driver-side, tiny, best-effort.
-    writeFileLog(spark, filePath, jobRunId, table, start, end, result, batchJobId)
-
-    // I10: file lifecycle — success ⇒ processed/, failure ⇒ error/
-    // (skipped for non-final retry attempts)
-    if (result.status != "Failed") moveFile(spark, filePath, "processed")
-    else if (moveOnFailure) moveFile(spark, filePath, "error")
+    writeFileLog(spark, filePath, jobRunId, table, start, end, result, batchJobId, stranded)
   }
 
   private def writeFileLog(spark: SparkSession, filePath: String, jobRunId: String,
       table: String, start: java.sql.Timestamp, end: java.sql.Timestamp,
-      result: LoadResult, batchJobId: Option[String]): Unit =
+      result: LoadResult, batchJobId: Option[String], stranded: Option[String]): Unit =
     try {
       moveTargetDir(spark, filePath, "logs").foreach { logs =>
         val stem = Ddl.tableName(filePath)
@@ -161,7 +153,8 @@ object ProcessFile {
             s"rows_inserted=${result.rowsInserted} rows_updated=${result.rowsUpdated} " +
             s"rows_failed=${result.rowsErrored}" +
             result.errorMessage.map(m => s" error=$m").getOrElse(""),
-          s"$end INFO duration_seconds=${(end.getTime - start.getTime) / 1000}")
+          s"$end INFO duration_seconds=${(end.getTime - start.getTime) / 1000}") ++
+          stranded.map(m => s"$end ERROR $m")
         val out = fs.create(new Path(dir, s"process_${stem}_$jobRunId.log"), true)
         try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
         finally out.close()
@@ -174,13 +167,19 @@ object ProcessFile {
     Option(p.getParent).map(parent => new Path(parent, sub).toString)
   }
 
-  private def moveFile(spark: SparkSession, filePath: String, sub: String): Unit = {
+  /** Moves the file into `sub/` next to it, replacing an older file of the
+    * same name there (the reference's `os.rename`). Returns the error when
+    * the file is still in place, since the next run would load it again. */
+  private def moveFile(spark: SparkSession, filePath: String, sub: String): Option[String] = {
     val p = new Path(filePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(p.getParent).foreach { parent =>
+    Option(p.getParent).flatMap { parent =>
       val dir = new Path(parent, sub)
       if (!fs.exists(dir)) fs.mkdirs(dir)
-      fs.rename(p, new Path(dir, p.getName))
+      val dest = new Path(dir, p.getName)
+      if (fs.exists(dest)) fs.delete(dest, false)
+      if (fs.rename(p, dest)) None
+      else Some(s"could not move $filePath to $dest; it stays in the inbox")
     }
   }
 }

@@ -73,7 +73,7 @@ class AnalyzeSpec extends GraftSuite {
 
   private def profileOf(values: Seq[String], name: String = "c") = {
     val df = values.toDF(name)
-    Analyze.profile(df).head
+    Analyze.profile(df)._2.head
   }
 
   test("ISO dates infer TimestampType (the intended semantics, SURVEY §1.2)") {

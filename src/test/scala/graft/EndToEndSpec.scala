@@ -138,6 +138,28 @@ class EndToEndSpec extends GraftSuite {
     assert(errs.count() == 1)
   }
 
+  test("rejected drop_recreate load keeps the existing target") {
+    val c = cfg.copy(notNullColumns = Map("dr_keep" -> Seq("id")))
+    val first = ProcessFile.run(spark,
+      writeFile(tempDir("e2e_keep1"), "dr_keep.csv", "id,name\n1,a\n2,b\n"), c)
+    assert(first.result.status == "Completed")
+    val dirty = ProcessFile.run(spark,
+      writeFile(tempDir("e2e_keep2"), "dr_keep.csv", "id,name\n3,c\n,d\n"), c)
+    assert(dirty.result.status == "Failed")
+    assert(spark.table("dr_keep").orderBy("id").collect().map(_.getInt(0)).toSeq == Seq(1, 2))
+  }
+
+  test("a same-named arrival replaces the older processed/ file and leaves the inbox empty") {
+    val dir = tempDir("e2e_again")
+    val c = cfg.copy(tableMode = TableMode.Append)
+    val j1 = ProcessFile.run(spark, writeFile(dir, "again_x.csv", "id,v\n1,a\n"), c)
+    val j2 = ProcessFile.run(spark, writeFile(dir, "again_x.csv", "id,v\n2,b\n"), c)
+    assert(j1.result.status == "Completed" && j2.result.status == "Completed")
+    assert(!Files.exists(dir.resolve("again_x.csv")), "second arrival stranded in the inbox")
+    assert(Files.readString(dir.resolve("processed/again_x.csv")) == "id,v\n2,b\n")
+    assert(spark.table("again_x").count() == 2)
+  }
+
   test("batch directory run with checkpoint resume skipping completed files") {
     val dir = tempDir("e2e_batch")
     writeFile(dir, "batch_t1.csv", "name,age,city\nx,1,NY\ny,2,LA\nz,3,SF\n")

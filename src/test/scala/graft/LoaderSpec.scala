@@ -5,6 +5,15 @@ import graft.load.{Loader, Upsert}
 import graft.ingest.Reader
 import org.apache.spark.sql.functions._
 
+/** Engine configs for driving `Loader.load` directly. */
+object LoadConf {
+  def apply(mode: TableMode, txn: TransactionMode = TransactionMode.Strict,
+      notNull: Map[String, Seq[String]] = Map.empty, maxRowErrors: Int = 100): EngineConfig =
+    EngineConfig.default.copy(tableMode = mode, transactionMode = txn,
+      notNullColumns = notNull, maxRowErrors = maxRowErrors)
+  val upsert: EngineConfig = apply(TableMode.Upsert)
+}
+
 class UpsertSpec extends GraftSuite {
   import spark.implicits._
 
@@ -86,22 +95,19 @@ class UpsertSpec extends GraftSuite {
       dialect = "derby")
     // strict insert (drop_recreate)
     val df = Seq(("1", "x"), ("2", "y")).toDF("id", "name")
-    val (good, bad) = Loader.split(df, Seq("id"))
-    Loader.prepareTable(spark, "jdbc_t", TableMode.DropRecreate, sink)
-    val r1 = Loader.loadStrict(spark, good, bad, "jdbc_t", TableMode.DropRecreate, sink)
+    val (r1, _) = Loader.load(spark, df, "jdbc_t",
+      LoadConf(TableMode.DropRecreate, notNull = Map("jdbc_t" -> Seq("id"))), sink)
     assert(r1.status == "Completed" && r1.rowsInserted == 2)
     assert(sink.read(spark, "jdbc_t").count() == 2)
     assert(sink.exists(spark, "jdbc_t"))
     // upsert: create then merge + RENAME TABLE swap, all over JDBC
     val s1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.loadUpsert(spark, s1, s1.limit(0), "jdbc_u", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r2 = Loader.load(spark, s1, "jdbc_u", LoadConf.upsert, sink)._1
     assert(r2.rowsInserted == 2)
     val s2 = Seq((2, "b2"), (3, "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r3 = Loader.loadUpsert(spark, s2, s2.limit(0), "jdbc_u", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r3 = Loader.load(spark, s2, "jdbc_u", LoadConf.upsert, sink)._1
     assert(r3.rowsInserted == 1 && r3.rowsUpdated == 1)
     val rows = sink.read(spark, "jdbc_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
@@ -114,8 +120,7 @@ class UpsertSpec extends GraftSuite {
     val swapSink = sink.copy(mergePushdown = false)
     val s3 = Seq((3, "c3"), (4, "d")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r4 = Loader.loadUpsert(spark, s3, s3.limit(0), "jdbc_u", Seq("id"),
-      "_row_idx", strict = true, 100, swapSink)
+    val r4 = Loader.load(spark, s3, "jdbc_u", LoadConf.upsert, swapSink)._1
     assert(r4.rowsInserted == 1 && r4.rowsUpdated == 1)
     val rows2 = sink.read(spark, "jdbc_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
@@ -134,13 +139,11 @@ class UpsertSpec extends GraftSuite {
       dialect = "derby")
     val s1 = Seq(("k1", "a"), ("k2", "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r1 = Loader.loadUpsert(spark, s1, s1.limit(0), "jdbc_clob", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r1 = Loader.load(spark, s1, "jdbc_clob", LoadConf.upsert, sink)._1
     assert(r1.rowsInserted == 2)
     val s2 = Seq(("k2", "b2"), ("k3", "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.loadUpsert(spark, s2, s2.limit(0), "jdbc_clob", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r2 = Loader.load(spark, s2, "jdbc_clob", LoadConf.upsert, sink)._1
     assert(r2.status == "Completed", s"load must not fail: ${r2.errorMessage}")
     assert(r2.rowsInserted == 1 && r2.rowsUpdated == 1)
     val rows = sink.read(spark, "jdbc_clob").orderBy("id").collect()
@@ -157,10 +160,9 @@ class UpsertSpec extends GraftSuite {
     init.write.format("parquet").saveAsTable(t1)
     val src = Seq((2, "b2"), (3, "c")).toDF("id", "name")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val bad = src.limit(0)
-    val r1 = Loader.loadUpsert(spark, src, bad, t1, Seq("id"), "_row_idx", strict = true, 100)
+    val r1 = Loader.load(spark, src, t1, LoadConf.upsert)._1
     val after1 = spark.table(t1).orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    val r2 = Loader.loadUpsert(spark, src, bad, t1, Seq("id"), "_row_idx", strict = true, 100)
+    val r2 = Loader.load(spark, src, t1, LoadConf.upsert)._1
     val after2 = spark.table(t1).orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(after1 == Seq((1, "a"), (2, "b2"), (3, "c")))
     assert(after1 == after2)
@@ -173,35 +175,56 @@ class LoaderSpec extends GraftSuite {
   import spark.implicits._
 
   test("strict mode rejects the whole file on any invalid row") {
+    val t = s"strict_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y")).toDF("id", "name")
-    val (good, bad) = Loader.split(df, Seq("id"))
-    val r = Loader.loadStrict(spark, good, bad, s"strict_${System.nanoTime()}", TableMode.DropRecreate)
-    assert(r.status == "Failed")
+    val (r, logged) = Loader.load(spark, df, t,
+      LoadConf(TableMode.DropRecreate, notNull = Map(t -> Seq("id"))))
+    assert(r.status == "Failed" && r.rowsErrored == 1 && logged.isEmpty)
   }
 
   test("tolerant mode loads valid rows when bad count is within budget") {
     val t = s"tol_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y"), ("3", "z")).toDF("id", "name")
-    val (good, bad) = Loader.split(df, Seq("id"))
-    val r = Loader.loadTolerant(spark, good, bad, t, TableMode.DropRecreate, maxRowErrors = 1)
+    val (r, logged) = Loader.load(spark, df, t, LoadConf(TableMode.DropRecreate,
+      TransactionMode.Tolerant, Map(t -> Seq("id")), maxRowErrors = 1))
+    assert(logged.map(_.count()).contains(1L))
     assert(r.status == "CompletedWithErrors")
     assert(r.rowsInserted == 2 && r.rowsErrored == 1)
     assert(spark.table(t).count() == 2)
   }
 
   test("tolerant mode rejects when bad count exceeds budget") {
+    val t = s"tolrej_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y"), (null, "z")).toDF("id", "name")
-    val (good, bad) = Loader.split(df, Seq("id"))
-    val r = Loader.loadTolerant(spark, good, bad, s"tolrej_${System.nanoTime()}",
-      TableMode.DropRecreate, maxRowErrors = 1)
-    assert(r.status == "Failed")
+    val (r, logged) = Loader.load(spark, df, t, LoadConf(TableMode.DropRecreate,
+      TransactionMode.Tolerant, Map(t -> Seq("id")), maxRowErrors = 1))
+    assert(r.status == "Failed" && r.rowsErrored == 2)
+    assert(logged.map(_.count()).contains(2L), "over-budget tolerant rows still reach the ledger")
+  }
+
+  test("strict rejections in insert and upsert modes write zero error rows and report the bad count") {
+    val dir = tempDir("strict_rej")
+    Seq(TableMode.DropRecreate, TableMode.Upsert).foreach { mode =>
+      val t = s"strict_rej_${mode.name}"
+      val f = writeFile(dir, s"$t.csv", "id,name\n1,a\n,b\n,c\n4,d\n")
+      val job = graft.orchestrate.ProcessFile.run(spark, f,
+        LoadConf(mode, notNull = Map(t -> Seq("id"))))
+      assert(job.result.status == "Failed", mode.name)
+      assert(job.result.rowsErrored == 2, s"${mode.name}: ${job.result}")
+      val errs = spark.table(graft.ledger.Ledger.JobErrorTable)
+        .filter(col("JobRunID") === job.jobRunId).count()
+      assert(errs == 0, s"${mode.name}: $errs error-ledger rows")
+      assert(!java.nio.file.Files.exists(dir.resolve(s"logs/${t}_${job.jobRunId}")))
+      assert(java.nio.file.Files.exists(dir.resolve(s"error/$t.csv")))
+      assert(!spark.catalog.tableExists(t))
+    }
   }
 
   test("fail mode errors when the table exists") {
     val t = s"failmode_${System.nanoTime()}"
     Seq((1, "a")).toDF("id", "v").write.format("parquet").saveAsTable(t)
     intercept[IllegalStateException] {
-      Loader.prepareTable(spark, t, TableMode.Fail)
+      Loader.load(spark, Seq((2, "b")).toDF("id", "v"), t, LoadConf(TableMode.Fail))
     }
   }
 
@@ -235,20 +258,18 @@ class LoaderSpec extends GraftSuite {
     val sink = new MemSink
     // strict insert
     val df = Seq(("1", "x"), ("2", "y")).toDF("id", "name")
-    val (good, bad) = Loader.split(df, Seq("id"))
-    val r1 = Loader.loadStrict(spark, good, bad, "mem_t", TableMode.DropRecreate, sink)
+    val (r1, _) = Loader.load(spark, df, "mem_t",
+      LoadConf(TableMode.DropRecreate, notNull = Map("mem_t" -> Seq("id"))), sink)
     assert(r1.status == "Completed" && r1.rowsInserted == 2)
     assert(sink.tables("mem_t").count() == 2)
     // upsert: create, then merge + swap through the sink
     val src1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.loadUpsert(spark, src1, src1.limit(0), "mem_u", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r2 = Loader.load(spark, src1, "mem_u", LoadConf.upsert, sink)._1
     assert(r2.rowsInserted == 2)
     val src2 = Seq((2, "b2"), (3, "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r3 = Loader.loadUpsert(spark, src2, src2.limit(0), "mem_u", Seq("id"),
-      "_row_idx", strict = true, 100, sink)
+    val r3 = Loader.load(spark, src2, "mem_u", LoadConf.upsert, sink)._1
     assert(r3.rowsInserted == 1 && r3.rowsUpdated == 1)
     val rows = sink.tables("mem_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq

@@ -76,8 +76,7 @@ class PropertySpec extends AnyFunSuite {
       allDecimal = present.nonEmpty && present.forall(isDec),
       allDatetime = false,
       intFitsInt32 = present.forall(isInt),
-      nonNullCount = present.size,
-      sampleValues = Nil)
+      nonNullCount = present.size)
   }
 
   test("lattice: all-integer columns never infer as varchar; ints within Int range infer INT") {
