@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -11,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * don't hide cross-query cache reuse.
   *
   * Artifact-cache pinning (r16 verdict #2): the stamped artifacts live
-  * under `java.io.tmpdir/graft_*` keyed by corpus signature and persist
+  * in the [[graft.core.StampedArtifact.families]] directories under the
+  * JVM temp dir, keyed by corpus signature, and persist
   * ACROSS JVMs, so [[SparkEntry.artifactQueries]] used to read bimodal
   * across runs — a clean-tmpdir run paid the rebuild (seconds), a warm
   * one a metadata load (ms), and window medians mixed the two states.
@@ -26,27 +26,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-bench")
 
     val artifactMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_ARTIFACTS", "warm")
-    if (artifactMode != "asis") {
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-        f.delete(); ()
-      }
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      Seq("graft_bpe_vocab", "graft_perceptron", "graft_fp_index",
-          "graft_fp_apnd", "graft_bigram_lm", "graft_tertile_bounds")
-        .foreach(d => deleteRec(new java.io.File(tmp, d)))
-    }
+    if (artifactMode != "asis") graft.core.StampedArtifact.clearAll()
 
     // SPARK_GRAFT_BENCH_ORDER=reverse runs the suite back-to-front: used
     // for clean re-measurement (run-order/JIT drift shows up as a

@@ -1,163 +1,104 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** A/B micro-benchmark for operator-routing decisions (not part of the
-  * driver contract). Times named plan variants interleaved A,B,A,B,… so
-  * JIT/IO drift hits both arms equally — the per-round bench showed that
-  * back-to-back blocks of the same query can differ 2-5x on this sandbox
-  * purely from run order, which is exactly the mistake this harness
-  * avoids. Usage: `runMain graft.MicroBench <sfDir> <reps>`. */
+  * driver contract). Each arm is a [[SparkEntry.queries]] name with
+  * optional session conf settings, e.g. `q114_triangles` and
+  * `q114_triangles@graft.triangles.bloomMaxEdges=0` (comma-separated
+  * `k=v` pairs, set for that arm's run and restored after it). Arms are
+  * timed interleaved A,B,A,B,… so JIT/IO drift hits both equally — the
+  * per-round bench showed that back-to-back blocks of the same query can
+  * differ 2-5x on a shared host purely from run order, which is exactly
+  * the mistake this harness avoids.
+  *
+  * Usage: `runMain graft.MicroBench <sfDir> <reps> [--explain <outDir>]
+  * <arm>...`. With `--explain`, each arm's formatted physical plan is
+  * written to `<outDir>/<arm>.txt` instead of timing it. */
 object MicroBench {
+
+  final case class Arm(name: String, query: String, settings: Seq[(String, String)])
+
+  /** Parse `query[@k=v,k=v...]`; throws IllegalArgumentException on an
+    * unknown query or a malformed setting. */
+  def parseArm(spec: String): Arm = {
+    val (query, conf) = spec.split("@", 2) match {
+      case Array(q) => (q, None)
+      case Array(q, c) => (q, Some(c))
+    }
+    require(SparkEntry.queries.contains(query), s"unknown query '$query' in arm '$spec'")
+    val settings = conf.toSeq.flatMap(_.split(",", -1)).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"malformed setting '$kv' in arm '$spec' (expected k=v)")
+      }
+    }
+    Arm(spec, query, settings)
+  }
+
+  /** Run `f` with the arm's settings applied, restoring the previous
+    * values (or unsetting) afterwards. */
+  private def withSettings[T](spark: SparkSession, arm: Arm)(f: => T): T = {
+    val saved = arm.settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    arm.settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach { case (k, old) => old.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private val usage =
+    "usage: MicroBench <sfDir> <reps> [--explain <outDir>] <arm>... " +
+      "(arm = query or query@k=v,k=v)"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    import graft.functions.VectorFunctions._
-
-    def emb = graft.ops.Relational.t(spark, sfDir, "embeddings")
-
-    // q24 arm A: HEAD — GroupedTopK aggregate routing
-    def q24Agg(): DataFrame =
-      graft.sim.Ann.lshTopK(emb, emb.filter(col("vec_id") < 20), k = 5, nBits = 8)
-
-    // q24 arm B: the r1 window row_number routing, reconstructed
-    def q24Window(): DataFrame = {
-      val nBits = 8
-      val c = graft.ops.Relational.fanOut(
-        emb.select(col("vec_id").as("corpus_id"), col("embedding").as("cv")))
-        .withColumn("bucket", rpBucket(col("cv"), nBits))
-        .withColumn("cnorm", sqrt(normSq(col("cv"))))
-      val q = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .withColumn("bucket0", rpBucket(col("qv"), nBits))
-        .withColumn("qnorm", sqrt(normSq(col("qv"))))
-      val probes = q.select(col("query_id"), col("qv"), col("qnorm"),
-        explode(array(
-          col("bucket0") +: (0 until nBits)
-            .map(b => col("bucket0").bitwiseXOR(lit(1L << b))): _*)).as("bucket"))
-      val cand = c.join(broadcast(probes), Seq("bucket"))
-        .filter(col("query_id") =!= col("corpus_id"))
-        .withColumn("cos", dot(col("cv"), col("qv")) / (col("cnorm") * col("qnorm")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("corpus_id"))
-      cand.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank").cast("int").as("rank"),
-          col("corpus_id"), col("cos"))
+    val parsed = try {
+      require(args.length >= 3, usage)
+      val reps = args(1).toIntOption.filter(_ > 0)
+        .getOrElse(throw new IllegalArgumentException(s"reps must be a positive integer, got '${args(1)}'"))
+      val (explainDir, armSpecs) = args.drop(2).toSeq match {
+        case "--explain" +: dir +: rest => (Some(dir), rest)
+        case rest => (None, rest)
+      }
+      require(armSpecs.nonEmpty, usage)
+      (args(0), reps, explainDir, armSpecs.map(parseArm))
+    } catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"[microbench] ${e.getMessage}")
+        sys.exit(2)
     }
+    val (sfDir, reps, explainDir, arms) = parsed
 
-    // q19 arm B: the pre-kernel shingle table (interpreted transform +
-    // array_distinct + string explode + xxhash64), kept for comparison
-    def q19OldShingles(): DataFrame = {
-      import graft.text.TextAnalysis
-      def oldShingleTable(df: DataFrame): DataFrame =
-        graft.ops.Relational.fanOut(
-            df.select(col("doc_id").as("doc"), col("text").as("__text")))
-          .select(col("doc"), TextAnalysis.tokens(col("__text")).as("t"))
-          .select(col("doc"), explode(array_distinct(
-            transform(sequence(lit(0), greatest(size(col("t")) - 3, lit(0))),
-              i => concat_ws(" ", slice(col("t"), i + 1, lit(3)))))).as("sh"))
-          .select(col("doc"), xxhash64(col("sh")).as("sh"))
-      val docs = graft.ops.Relational.t(spark, sfDir, "documents")
-      val shAll = oldShingleTable(docs).cache()
-      val sizes = shAll.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
-      val a = shAll.as("a"); val b = shAll.as("b")
-      val inter = a.join(b, col("a.sh") === col("b.sh") && col("a.doc") < col("b.doc"))
-        .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-        .agg(count(lit(1)).as("n_common"))
-      inter
-        .join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("jaccard", col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"))
-        .filter(col("jaccard") >= 0.5)
-    }
+    val spark = Sessions.create("graft-microbench")
+    def build(arm: Arm): DataFrame = SparkEntry.queries(arm.query)(spark, sfDir)
 
-    def q19New(): DataFrame =
-      graft.ops.ScaleOps.q19NgramJaccard(spark, sfDir)
-
-    // q57/q36 repetition-gate routing: split two-expression form
-    // (size(array_distinct) + TopBigramCount — two walks over the token
-    // array) vs the fused one-pass RepetitionStats kernel
-    import graft.text.TextAnalysis
-    def docs = graft.ops.Relational.fanOut(
-      graft.ops.Relational.t(spark, sfDir, "documents"))
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-
-    def q57Split(): DataFrame =
-      docs.select(col("doc_id"), size(col("tk")).as("n_tokens"),
-        TextAnalysis.dupTokenFrac(col("tk")).as("dup_token_frac"),
-        TextAnalysis.topBigramFrac(col("tk")).as("top_bigram_frac"))
-
-    def q57Fused(): DataFrame =
-      docs.withColumn("__rep", TextAnalysis.repetitionStatsOf(col("tk")))
-        .select(col("doc_id"), size(col("tk")).as("n_tokens"),
-          TextAnalysis.dupTokenFracFrom(col("__rep"), col("tk")).as("dup_token_frac"),
-          TextAnalysis.topBigramFracFrom(col("__rep"), col("tk")).as("top_bigram_frac"))
-
-    // q64 chunk-key routing: FNV kernel (HEAD — exchanges carry longs) vs
-    // the interpreted HOF + chunk-string explode it replaced
-    def q64Kernel(): DataFrame =
-      graft.dedup.ChunkDedup.chunkStats(
-        graft.ops.Relational.t(spark, sfDir, "documents"), "doc_id", "text")
-
-    def q64Hof(): DataFrame = {
-      // fanOut matches chunkStats' internal fanOut — both arms get the
-      // same scan parallelism, the A/B isolates the key routing alone
-      val toks = graft.ops.Relational.fanOut(
-          graft.ops.Relational.t(spark, sfDir, "documents"))
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-      val chunks = toks.select(col("doc_id"),
-        explode(transform(
-          sequence(lit(0), (ceil(size(col("tk")) / lit(10.0)).cast("int") - 1)),
-          i => concat_ws(" ", slice(col("tk"), i * 10 + 1, lit(10))))).as("ch"))
-      val cf = chunks.groupBy(col("ch"))
-        .agg(countDistinct(col("doc_id")).as("df_docs"))
-      chunks.join(cf, Seq("ch"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(when(col("df_docs") > 1, 1L).otherwise(0L)).as("n_dup_chunks"))
-    }
-
-    val arms: Seq[(String, () => DataFrame)] = Seq(
-      "q24_agg" -> (() => q24Agg()),
-      "q24_window" -> (() => q24Window()),
-      "q19_kernel" -> (() => q19New()),
-      "q19_hof" -> (() => q19OldShingles()),
-      "q57_split" -> (() => q57Split()),
-      "q57_fused" -> (() => q57Fused()),
-      "q64_kernel" -> (() => q64Kernel()),
-      "q64_hof" -> (() => q64Hof()))
-
-    // warmup both
-    arms.foreach { case (_, f) => f().count() }
-    spark.catalog.clearCache()
-
-    val times = scala.collection.mutable.Map[String, List[Double]]()
-      .withDefaultValue(Nil)
-    for (_ <- 1 to reps; (name, f) <- arms) {
-      val t0 = System.nanoTime()
-      f().count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      times(name) = times(name) :+ dt
-    }
-    times.toSeq.sortBy(_._1).foreach { case (name, ts) =>
-      val sorted = ts.sorted
-      println(f"MICRO $name%-12s median=${sorted(sorted.size / 2)}%.3f " +
-        f"min=${sorted.head}%.3f all=${ts.map(t => f"$t%.3f").mkString(",")}")
+    explainDir match {
+      case Some(dir) =>
+        new java.io.File(dir).mkdirs()
+        arms.foreach { arm =>
+          val txt = withSettings(spark, arm)(build(arm).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
+          val f = new java.io.File(dir, s"${arm.name}.txt")
+          java.nio.file.Files.writeString(f.toPath, txt)
+          println(s"EXPLAIN ${arm.name} -> $f (${txt.length} chars)")
+        }
+      case None =>
+        arms.foreach(arm => withSettings(spark, arm)(build(arm).count()))
+        spark.catalog.clearCache()
+        val times = Array.fill(arms.size)(List.empty[Double])
+        for (_ <- 1 to reps; (arm, i) <- arms.zipWithIndex) {
+          val dt = withSettings(spark, arm) {
+            val t0 = System.nanoTime()
+            build(arm).count()
+            (System.nanoTime() - t0) / 1e9
+          }
+          spark.catalog.clearCache()
+          times(i) = times(i) :+ dt
+        }
+        arms.zip(times).foreach { case (arm, ts) =>
+          val sorted = ts.sorted
+          println(f"MICRO ${arm.name}%-12s median=${sorted(sorted.size / 2)}%.3f " +
+            f"min=${sorted.head}%.3f all=${ts.map(t => f"$t%.3f").mkString(",")}")
+        }
     }
     spark.stop()
   }

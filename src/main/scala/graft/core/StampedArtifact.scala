@@ -38,6 +38,41 @@ import org.apache.spark.sql.SparkSession
   * both. Single-writer contract throughout. */
 object StampedArtifact {
 
+  /** The artifact families, one directory each under the JVM temp dir. */
+  val BpeVocab = "graft_bpe_vocab"
+  val Perceptron = "graft_perceptron"
+  val FpIndex = "graft_fp_index"
+  val FpAppend = "graft_fp_apnd"
+  val BigramLm = "graft_bigram_lm"
+  val TertileBounds = "graft_tertile_bounds"
+  val families: Seq[String] =
+    Seq(BpeVocab, Perceptron, FpIndex, FpAppend, BigramLm, TertileBounds)
+
+  private def tmpRoot: String = sys.props("java.io.tmpdir")
+
+  /** Artifact location for a corpus: `<tmpdir>/<family>/md5(dir|[salt|]sig)`
+    * with `sig` the documents part-file signature, so a rewritten corpus
+    * can never reuse a stale artifact. A non-empty `salt` separates two
+    * artifacts of one family for the same corpus (q192's `log2`
+    * boundaries beside q188's arithmetic ones). */
+  def pathFor(spark: SparkSession, family: String, dir: String,
+      salt: String = ""): String = {
+    val sig = graft.ops.Relational.corpusSignature(spark, dir, "documents")
+    val key = if (salt.isEmpty) s"$dir|$sig" else s"$dir|$salt|$sig"
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"$tmpRoot/$family/$md5"
+  }
+
+  /** Delete every family's directory (all corpora's artifacts). */
+  def clearAll(): Unit = {
+    def deleteRec(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
+      f.delete(); ()
+    }
+    families.foreach(d => deleteRec(new java.io.File(tmpRoot, d)))
+  }
+
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -26,8 +26,9 @@ import graft.text.TextAnalysis
   * never leave the expression; every exchange carries longs), the same
   * contract as `Dedup.shingleTable`. The DuckDB oracle groups on the
   * chunk STRINGS — equivalent iff FNV is collision-free on the corpus's
-  * chunk set, which `ScaleStress audit` verifies alongside the shingle
-  * sets (q19/q21 precondition).
+  * chunk set — audited next to the shingle sets (q19/q21
+  * precondition): 0 collisions over 28k distinct chunks at sf0.1
+  * (ROUND6_NOTES.md).
   */
 object ChunkDedup {
 

@@ -185,7 +185,8 @@ object Dedup {
     * pipeline caller should use. Routes to [[jaccardPairsCapped]] with the
     * stopword-level [[DefaultNearDupMaxDf]]: candidate generation is
     * df-bounded, so runtime stays ~linear in corpus size on skewed real-
-    * world corpora (measured in ScaleStress's boilerplate-skew case).
+    * world corpora (a 30%-boilerplate corpus: capped wall time ~2× for
+    * 10× docs, candidate space −98.7% — ROUND5_NOTES.md).
     * [[jaccardPairs]] (uncapped, exact) remains for oracle verification
     * and small corpora. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,

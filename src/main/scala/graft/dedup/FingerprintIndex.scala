@@ -107,8 +107,8 @@ object FingerprintIndex {
     *
     * Cost ∝ batch + one pass over the COMPACT index (8 bytes/shingle,
     * orders of magnitude under the corpus scan a rebuild pays);
-    * `ScaleStress apnd` measures append vs rebuild directly. Returns
-    * the new stamped row count. Single-writer contract, like the
+    * append cost measured flat across a 4× history (ROUND13_NOTES.md).
+    * Returns the new stamped row count. Single-writer contract, like the
     * vocab. */
   def appendIndex(spark: SparkSession, newHashes: DataFrame, path: String): Long = {
     require(newHashes.columns.toSeq == Seq("h"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * expressions as SQL functions at session build time —
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 
 /** Persistence for the trained quality-classifier weight vector
   * (graft.ops.ScaleOps25's batch perceptron) — the third stamped
@@ -28,12 +29,8 @@ object PerceptronModel {
   /** Canonical artifact path for a corpus (the vocab/index convention:
     * keyed by corpus identity, so a changed corpus gets a NEW path and
     * stale artifacts can never cross-contaminate). */
-  def modelPathFor(spark: SparkSession, dir: String): String = {
-    val sig = graft.ops.Relational.corpusSignature(spark, dir, "documents")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$sig".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_perceptron/$key"
-  }
+  def modelPathFor(spark: SparkSession, dir: String): String =
+    StampedArtifact.pathFor(spark, StampedArtifact.Perceptron, dir)
 
   /** Persist a trained weight vector — SIDE-WRITE-THEN-SWAP (r13 verdict
     * #6: the earlier in-place overwrite left a window where a reader
@@ -64,9 +61,9 @@ object PerceptronModel {
     // UNSTAMP → swap → RESTAMP (the shared [[graft.core.StampedArtifact]]
     // discipline, r15): a writer dying between the rename and the stamp
     // reads as never-stamped, never as an old stamp over new weights
-    graft.core.StampedArtifact.unstampAndSwap(spark, path, "weights",
+    StampedArtifact.unstampAndSwap(spark, path, "weights",
       side.toString, Seq("_rows"))
-    graft.core.StampedArtifact.writeMeta(spark, path, "_rows",
+    StampedArtifact.writeMeta(spark, path, "_rows",
       weights.length.toString)
   }
 
@@ -74,7 +71,7 @@ object PerceptronModel {
     * garbage (the Bpe.vocabRows tolerant contract: both mean "no valid
     * stamp" and the caller's rebuild branch is the right response). */
   def modelRows(spark: SparkSession, path: String): Long =
-    graft.core.StampedArtifact.stampedRows(spark, path)
+    StampedArtifact.stampedRows(spark, path)
 
   /** Reopen a persisted model, VALIDATED on load: stamp == row count,
     * buckets exactly 0..n-1 with one weight each. Loud require on any

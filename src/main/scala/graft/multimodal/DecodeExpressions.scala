@@ -401,7 +401,7 @@ case class Mp4Probe(child: Expression) extends UnaryExpression {
 
 /** content = mp4_fixture(id): deterministic complete minimal ISO-BMFF
   * containers (see Mp4.fixtureBytes) — the corpus-from-nothing generator
-  * for video-container tests, q81, and StressGen media corpora. */
+  * for video-container tests and q81. */
 case class Mp4Fixture(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "mp4_fixture"
@@ -593,7 +593,7 @@ case class Mp3Fixture(child: Expression) extends UnaryExpression {
 
 /** content = wav_fixture(id): deterministic complete RIFF/WAVE PCM bytes
   * (see Wav.fixtureBytes) — the corpus-from-nothing generator for audio
-  * tests, q79, and StressGen media corpora. */
+  * tests and q79. */
 case class WavFixture(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_fixture"
@@ -755,7 +755,7 @@ case class TiffFixture(child: Expression) extends UnaryExpression {
 
 /** content = ppm_fixture(id): deterministic complete P6 file bytes (see
   * Ppm.fixtureBytes) — the corpus-from-nothing generator for media tests,
-  * q26, and StressGen media corpora. */
+  * and q26. */
 case class PpmFixture(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "ppm_fixture"

@@ -145,7 +145,7 @@ object Ppm {
   /** Deterministic PPM fixture bytes for an id — REAL, complete P6 files
     * (parseable by any netpbm tool): dims cycle 3..5 x 2..3 with the id,
     * sample j = (id*31 + j*7) mod 256. Used by q26 (arithmetic-mirrorable
-    * in DuckDB without touching bytes) and by StressGen's media corpora. */
+    * in DuckDB without touching bytes). */
   def fixtureBytes(id: Long): Array[Byte] = {
     val w = (3 + java.lang.Math.floorMod(id, 3L)).toInt
     val h = (2 + java.lang.Math.floorMod(id, 2L)).toInt

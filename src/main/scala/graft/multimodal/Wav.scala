@@ -154,7 +154,7 @@ object Wav {
     *   sampleRate = 8000 + (id mod 4)·2000
     *   frames     = 4 + id mod 5
     *   sample j   = ((id·37 + j·11) mod 2^bits) − 2^(bits−1)
-    * Used by q79 and available to StressGen media corpora. */
+    * Used by q79. */
   def fixtureBytes(id: Long): Array[Byte] = {
     val ch = (1 + java.lang.Math.floorMod(id, 2L)).toInt
     val bits = if (java.lang.Math.floorMod(id, 3L) == 0L) 8 else 16

@@ -217,7 +217,8 @@ object ScaleOps16 {
     *     become an EQUI-JOIN on position+k — a dense unique long key,
     *     balanced by construction.
     * Both branches are row-identical (proven differentially in the
-    * spec and by `ScaleStress snmskew`); the DuckDB mirror expresses
+    * spec and, at 120k docs with a 30% hot skey run, sym_diff 0 —
+    * ROUND10_NOTES.md); the DuckDB mirror expresses
     * the windowed form. */
   /** Per-corpus memo of the largest block size — the q127 nodeCountMemo
     * pattern: the routing measurement is a full-corpus aggregate, and an

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 import org.apache.spark.sql.expressions.Window
 import Relational.t
 
@@ -16,16 +17,6 @@ object ScaleOps20 {
 
   // --- encode from the persisted vocab artifact (q161) ---------------------
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Artifact location for a corpus: keyed by dir AND the part-file
-    * signature, so a rewritten corpus can never reuse a stale vocab. */
-  private def vocabPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_bpe_vocab/" +
-      md5hex(dir + "|" + Relational.corpusSignature(s, dir, "documents"))
-
   /** q161: BPE encode from the PERSISTED tokenizer artifact — the full
     * lifecycle the r10 verdict asked for, as an oracle-checked arm:
     * train (per-corpus memo), [[graft.text.Bpe.writeVocab]] (merge table
@@ -38,7 +29,7 @@ object ScaleOps20 {
     * "train once, ship the artifact, encode anywhere" path with zero
     * retraining. */
   def q161BpeArtifactEncode(s: SparkSession, dir: String): DataFrame = {
-    val path = vocabPathFor(s, dir)
+    val path = StampedArtifact.pathFor(s, StampedArtifact.BpeVocab, dir)
     // HOT PATH (r16 verdict #1, the TertileBounds.acquire policy): a
     // stamped, structurally valid vocab at the corpus-signature-keyed
     // path encodes WITHOUT retraining — "train once, ship the artifact,

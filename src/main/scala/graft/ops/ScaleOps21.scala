@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 import Relational.t
 
 /** Round-12 batch 21: the incremental-dedup HISTORY made a persisted,
@@ -15,16 +16,11 @@ import Relational.t
   * batch assignment riding the size-adaptive packing prefix sum). */
 object ScaleOps21 {
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Artifact location for a corpus's history index: keyed by dir AND
     * the part-file signature (the q161 discipline) so a rewritten corpus
     * can never reuse a stale index. */
   private[graft] def indexPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_fp_index/" +
-      md5hex(dir + "|" + Relational.corpusSignature(s, dir, "documents"))
+    StampedArtifact.pathFor(s, StampedArtifact.FpIndex, dir)
 
   /** Per-(corpus identity) memo of the history index's (rows, xor)
     * content signature — the q150/q127 memo discipline: the signature is

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 import Relational.t
 
 /** Round-13 batch 24: the fingerprint-index APPEND lifecycle made an
@@ -12,17 +13,12 @@ import Relational.t
   * known-broken baseline for on out-of-corpus text). */
 object ScaleOps24 {
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Artifact location for q174's appended history index — its own
     * namespace (the q164 artifact is a DIFFERENT history: halves, not
     * thirds), keyed by dir AND the part-file signature (the q161
     * discipline) so a rewritten corpus can never reuse a stale index. */
   private[graft] def indexPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_fp_apnd/" +
-      md5hex(dir + "|" + Relational.corpusSignature(s, dir, "documents"))
+    StampedArtifact.pathFor(s, StampedArtifact.FpAppend, dir)
 
   /** Per-(corpus identity) memo of the FINAL (epoch-1 ∪ epoch-2)
     * index signature — the q164 sigMemo discipline: deterministic in
@@ -56,8 +52,8 @@ object ScaleOps24 {
     * artifact's own stamps against its on-disk content and go straight
     * to the probe — shingle hashes are a pure map, LEFT SEMI on the
     * 8-byte hash, per-doc rollup. The append path is the 100 TB loop's
-    * shape: state advances ∝ batch, never ∝ history (`ScaleStress apnd`
-    * measures it). */
+    * shape: state advances ∝ batch, never ∝ history (append cost
+    * measured flat across a 4× history, ROUND13_NOTES.md). */
   def q174AppendedIndexDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.FingerprintIndex
     val docs = Relational.fanOut(t(s, dir, "documents"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 import Relational.t
 
 /** Round-14 batch 27: the HONEST CCNet setup — a reference-corpus
@@ -36,16 +37,11 @@ object ScaleOps27 {
   /** The reference slice: CCNet's wiki stand-in. */
   val RefLang = "en"
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Artifact location for the q184 reference LM — keyed by dir AND the
     * part-file signature (the q161/q164/q178 discipline) so a rewritten
     * corpus can never reuse a stale model. */
   private[graft] def lmPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_bigram_lm/" +
-      md5hex(dir + "|" + Relational.corpusSignature(s, dir, "documents"))
+    StampedArtifact.pathFor(s, StampedArtifact.BigramLm, dir)
 
   /** Per-corpus memo of (V, pairRows, pairXor) — V for the scoring
     * literal and the (rows, xor) signature for the q164-style

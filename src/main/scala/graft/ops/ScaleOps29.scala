@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 
 /** Round-15 batch 29: the persisted TERTILE-BOUNDARY artifact as an
   * oracle-checked arm — q188 is q185 (the full CCNet disposition under
@@ -24,16 +25,11 @@ import org.apache.spark.sql.functions._
   * noise next to the scoring chain it caches the output of. */
 object ScaleOps29 {
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Artifact location for the q188 boundary table — keyed by dir AND
     * the part-file signature (the q161/q164/q184 discipline) so a
     * rewritten corpus can never reuse stale boundaries. */
   private[graft] def boundsPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_tertile_bounds/" +
-      md5hex(dir + "|" + Relational.corpusSignature(s, dir, "documents"))
+    StampedArtifact.pathFor(s, StampedArtifact.TertileBounds, dir)
 
   /** The ranking-semantics identity of q188's boundary producer: add-k
     * smoothing, `lang='en'` reference slice, arithmetic-mean collapse —

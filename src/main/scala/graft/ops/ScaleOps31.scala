@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.StampedArtifact
 
 /** Round-16 batch 31: the LOG-PERPLEXITY CCNet disposition END TO END
   * (r15 verdict #1). The r15 ablation pinned that the arithmetic-mean
@@ -39,7 +40,8 @@ import org.apache.spark.sql.functions._
   * on the densified 14.5M-pair-type stress corpus, both kernels now
   * dominated by the shared DECIMAL ratio step; the r16 era's 2.5–4.4×
   * band was the 20-round DECIMAL(38,0) projection tower, measured
-  * honestly by the `ScaleStress disp`/fixed-`plx` arms after the r15
+  * honestly by the full-disposition stress arm (ROUND16_NOTES.md,
+  * ROUND17_NOTES.md) after the r15
   * "free" ratio was found to be a count()-pruned artifact — linear
   * CPU, no new data movement) + q185's routed
   * boundary pass and rollup (sub-second next to scoring at stress
@@ -53,14 +55,10 @@ import org.apache.spark.sql.functions._
   * independent of corpus size (the r13 scale argument survives: the
   * boundary exchange carries min(langRows, 6.5e7) histogram rows per
   * language, never the corpus), but the per-language window's
-  * single-partition sort pays that bigger constant at full saturation —
-  * the `ScaleStress disp` arm measures the composed cost of both
-  * rankings' dispositions at stress scale. */
+  * single-partition sort pays that bigger constant at full saturation
+  * (the composed cost of both rankings' dispositions at 1M stress docs
+  * is in ROUND17_NOTES.md §4). */
 object ScaleOps31 {
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** The ranking-semantics identity of q192's boundary producer: add-k
     * smoothing, `lang='en'` reference slice, log₂-perplexity collapse
@@ -76,8 +74,7 @@ object ScaleOps31 {
     * arithmetic boundaries and q192's log boundaries for one corpus
     * are DIFFERENT artifacts that must never collide on a path. */
   private[graft] def boundsPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_tertile_bounds/" +
-      md5hex(dir + "|log2|" + Relational.corpusSignature(s, dir, "documents"))
+    StampedArtifact.pathFor(s, StampedArtifact.TertileBounds, dir, salt = "log2")
 
   /** Full-corpus LOG-RANKING scores — (doc_id, lang, score_fp) with
     * score_fp = −plx_fp, so the strict tertile rule's "head = highest

@@ -23,21 +23,11 @@ object Main {
     val cli = parseArgs(args)
     val config = cli.config.map(EngineConfig.load).getOrElse(EngineConfig.default)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", config.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      // persistent metastore: catalog tables (incl. the ledger) survive
-      // across CLI invocations — the analog of the reference's RDBMS-backed
-      // system tables
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (cli.verbose) "INFO" else "WARN")
+    // persistent metastore: catalog tables (incl. the ledger) survive
+    // across CLI invocations — the analog of the reference's RDBMS-backed
+    // system tables
+    val spark = graft.Sessions.create("graft-etl", Some(config.warehouseDir))
+    if (cli.verbose) spark.sparkContext.setLogLevel("INFO")
 
     try {
       if (cli.checkDeps) {

@@ -108,8 +108,8 @@ object Packing {
     *   - above it: the HIERARCHICAL two-phase prefix sum
     *     ([[packAssignmentsByCountHierarchical]]) — no per-group window
     *     exists at all, max task ≈ rows/P regardless of group skew.
-    * Both branches are row-identical (differential specs + `ScaleStress
-    * packskew`), so the routing can never change results. */
+    * Both branches are row-identical (differential specs), so the
+    * routing can never change results. */
   def packAssignmentsByCount(docs: DataFrame, idCol: String,
       nTokensCol: String, groupCol: String, ctxTokens: Long): DataFrame =
     packAssignmentsByCountMeasured(docs, idCol, nTokensCol, groupCol,
@@ -154,8 +154,8 @@ object Packing {
     * max window partition = one range partition's slice, ≈ rows/P
     * regardless of group skew. Identical output to the single-window
     * form (same total (group, id) order, same cumulative sums — proven
-    * differentially in ScaleOpsSpec and under a 95%-one-source corpus
-    * by `ScaleStress packskew`). */
+    * differentially in ScaleOpsSpec and under a 95%-one-source corpus,
+    * ROUND12_NOTES.md). */
   private[graft] def packAssignmentsByCountHierarchical(docs: DataFrame,
       idCol: String, nTokensCol: String, groupCol: String,
       ctxTokens: Long): DataFrame = {

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for the one-call training-data pipeline:
   *
   * {{{
@@ -24,15 +22,7 @@ object PipelineMain {
       sys.exit(1)
     }
     val Array(docsPath, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("graft-pipeline")
     try {
       val docs = spark.read.parquet(docsPath)
       val test = args.lift(2).map(spark.read.parquet(_))

@@ -80,8 +80,9 @@ object Bpe {
   val DefaultBatchK = 16
 
   /** Driver-synchronization rounds of the most recent train call in
-    * this JVM — DIAGNOSTICS ONLY (the ScaleStress `bpebatch` readout
-    * and the pipeline spec's rounds ≈ merges/batchK pin); never part of
+    * this JVM — DIAGNOSTICS ONLY (the 256-merge saving in
+    * BENCH_COMPARISON_r12.md and the pipeline spec's rounds ≈
+    * merges/batchK pin); never part of
     * the data path. */
   val lastDriverRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 

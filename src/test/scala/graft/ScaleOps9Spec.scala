@@ -40,9 +40,15 @@ class ScaleOps9Spec extends GraftSuite {
       (3L, 1L), (3L, 4L), (3L, 5L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = graft.ops.ScaleOps9.q114Triangles(spark, dir.toString)
+    def triangles() = graft.ops.ScaleOps9.q114Triangles(spark, dir.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == Seq((1L, 1L), (2L, 2L), (3L, 2L), (4L, 1L)))
+    val expected = Seq((1L, 1L), (2L, 2L), (3L, 2L), (4L, 1L))
+    assert(triangles() == expected)
+    // bloomMaxEdges=0 skips the Bloom prefilter: the plain wedge join
+    // must close exactly the same triangles
+    spark.conf.set("graft.triangles.bloomMaxEdges", "0")
+    try assert(triangles() == expected)
+    finally spark.conf.unset("graft.triangles.bloomMaxEdges")
   }
 
   test("q114: degree-ordered orientation count equals the naive u<v<w enumeration on real data") {
