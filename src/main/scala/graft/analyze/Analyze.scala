@@ -3,7 +3,7 @@ package graft.analyze
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{ColumnProfile, InferredType, TableOverride}
+import graft.core.{ColumnProfile, ColumnRef, InferredType, TableOverride}
 
 /** Profiling + type inference + cast planning — the analyze stage of the
   * engine (reference `analyze_file_structure` src/file-to-sql-loader.py:
@@ -56,41 +56,69 @@ object Analyze {
   private def isAbsent(c: Column): Column =
     c.isNull || trim(c) === "" || lower(trim(c)) === "nan"
 
+  /** Shape guards for the numeric casts of [[profile]]. Spark's string →
+    * integral `try_cast` runs the ANSI cast and catches its exception, and
+    * string → decimal catches `BigDecimal`'s NumberFormatException, so an
+    * unguarded profile throws twice for every non-integer cell and three
+    * times for every non-numeric one, and those exceptions, not the scan,
+    * are what an unguarded profile spends its time on. Each pattern admits
+    * every string its cast accepts (it may admit more), so a guarded cast
+    * counts exactly what the plain cast counts.
+    *
+    * Integral: the trim rule of `UTF8String.toLongExact` (bytes 0x00-0x20
+    * and 0x7F at either end), an optional sign, ASCII digits. Decimal: the
+    * `BigDecimal(String)` grammar, whose digits are any Unicode `Nd` digit
+    * (`try_cast('１２' as decimal(18,4))` is 12.0000), between the same trim
+    * bytes. `ProfileGuardSpec` pins both against the plain casts. */
+  private val IntegralShape = "^[\\x00-\\x20\\x7F]*[+-]?[0-9]+[\\x00-\\x20\\x7F]*\\z"
+  private val DecimalShape =
+    "^[\\x00-\\x20\\x7F]*[+-]?(\\p{Nd}+\\.?\\p{Nd}*|\\.\\p{Nd}+)([eE][+-]?\\p{Nd}+)?" +
+      "[\\x00-\\x20\\x7F]*\\z"
+
   /** One-pass whole-table profile: the row count, and for each string
     * column max length, null presence, forall-int / forall-decimal /
     * forall-datetime (counting convention: #valid == #present), int32 fit,
-    * and count. `df` must have at least one column. */
+    * and count. `df` must have at least one column.
+    *
+    * Each numeric `try_cast` runs only on a value that passed its shape
+    * guard (above), so no cell throws. There is one integral cast: a value
+    * fits INT exactly when its long fits the int32 range (the int and long
+    * casts accept one grammar), so int32 fit is read off the long cast's
+    * min and max. */
   def profile(df: DataFrame): (Long, Seq[ColumnProfile]) = {
     val cols = df.schema.fields.map(_.name).toSeq
     val aggs: Seq[Column] = cols.flatMap { name =>
-      val c = col(name)
+      val c = ColumnRef(name)
       val present = !isAbsent(c)
       val trimmed = trim(c)
+      val asLong = when(present && trimmed.rlike(IntegralShape), trimmed.try_cast("long"))
+      val asDecimal =
+        when(present && trimmed.rlike(DecimalShape), trimmed.try_cast("decimal(18,4)"))
       Seq(
         max(when(c.isNotNull, length(c))).as(s"${name}__maxlen"),
         sum(when(isAbsent(c), 1L).otherwise(0L)).as(s"${name}__nulls"),
         sum(when(present, 1L).otherwise(0L)).as(s"${name}__present"),
-        sum(when(present && trimmed.try_cast("long").isNotNull, 1L).otherwise(0L))
-          .as(s"${name}__ints"),
-        sum(when(present && trimmed.try_cast("decimal(18,4)").isNotNull, 1L).otherwise(0L))
-          .as(s"${name}__decs"),
+        count(asLong).as(s"${name}__ints"),
+        min(asLong).as(s"${name}__minint"),
+        max(asLong).as(s"${name}__maxint"),
+        count(asDecimal).as(s"${name}__decs"),
         sum(when(present && parseDatetimeAll(trimmed).isNotNull, 1L).otherwise(0L))
-          .as(s"${name}__dts"),
-        sum(when(present && trimmed.try_cast("int").isNotNull, 1L).otherwise(0L))
-          .as(s"${name}__int32s"))
+          .as(s"${name}__dts"))
     }
     val row: Row = df.agg(count(lit(1)).as("__rows"), aggs: _*).head()
     def l(k: String): Long = Option(row.getAs[Any](k)).map(_.toString.toLong).getOrElse(0L)
     l("__rows") -> cols.map { name =>
       val present = l(s"${name}__present")
+      val ints = l(s"${name}__ints")
       ColumnProfile(
         name = name,
         maxLength = l(s"${name}__maxlen"),
         hasNulls = l(s"${name}__nulls") > 0,
-        allInteger = present > 0 && l(s"${name}__ints") == present,
+        allInteger = present > 0 && ints == present,
         allDecimal = present > 0 && l(s"${name}__decs") == present,
         allDatetime = present > 0 && l(s"${name}__dts") == present,
-        intFitsInt32 = l(s"${name}__int32s") == l(s"${name}__ints"),
+        intFitsInt32 = ints == 0 ||
+          (l(s"${name}__minint") >= Int.MinValue && l(s"${name}__maxint") <= Int.MaxValue),
         nonNullCount = present)
     }
   }
@@ -230,7 +258,8 @@ object Analyze {
     * every type including varchar (reference converts NaN→None, :1116). */
   def castPlan(df: DataFrame, types: Seq[(String, InferredType)]): DataFrame = {
     val cols = types.map { case (name, t) =>
-      val guarded = when(isAbsent(col(name)), lit(null)).otherwise(col(name))
+      val c = ColumnRef(name)
+      val guarded = when(isAbsent(c), lit(null)).otherwise(c)
       castColumn(guarded, t).as(name)
     }
     df.select(cols: _*)

@@ -61,7 +61,9 @@ object InferredType {
 }
 
 /** Per-column profiling result (reference `columns_info` dict :703-713),
-  * computed in ONE distributed agg pass — see analyze.Profiler. */
+  * computed in ONE distributed agg pass — see `analyze.Analyze.profile`.
+  * `intFitsInt32` holds when no present value parses as a long, or when
+  * the smallest and largest parsed longs both lie in the int32 range. */
 final case class ColumnProfile(
     name: String,
     maxLength: Long,

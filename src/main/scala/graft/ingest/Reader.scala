@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import graft.core.FileFormat
+import graft.core.{ColumnRef, FileFormat}
 
 /** Raw readers (SURVEY §2 A1-A3). Every column is read as STRING — the type
   * lattice (analyze.TypeInference) decides the real types from the data, so
@@ -40,8 +40,8 @@ object Reader {
     // primitivesAsString leaves structs/arrays nested; the reference only
     // handles flat record-arrays (SURVEY §1.1) — stringify anything nested.
     val cols = df.schema.fields.map { f =>
-      if (f.dataType == StringType) col(f.name)
-      else to_json(col(f.name)).as(f.name)
+      if (f.dataType == StringType) ColumnRef(f.name)
+      else to_json(ColumnRef(f.name)).as(f.name)
     }
     df.select(cols.toSeq: _*)
   }

@@ -47,7 +47,7 @@ object Loader {
   private def split(castDf: DataFrame, notNull: Seq[String]): (DataFrame, DataFrame) = {
     if (notNull.isEmpty) (castDf, castDf.limit(0))
     else {
-      val ok = notNull.foldLeft(lit(true))((acc, c) => acc && col(c).isNotNull)
+      val ok = notNull.foldLeft(lit(true))((acc, c) => acc && ColumnRef(c).isNotNull)
       (castDf.filter(ok), castDf.filter(!ok))
     }
   }

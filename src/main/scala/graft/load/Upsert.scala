@@ -3,6 +3,7 @@ package graft.load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.ColumnRef
 
 /** Upsert = last-wins dedup + full-outer key join + per-column coalesce —
   * the reference's per-row MERGE/UPDATE-then-INSERT loop
@@ -22,7 +23,7 @@ object Upsert {
   /** Deduplicate the source on `pk`, keeping the row with the highest
     * `ordinalCol` (file order). */
   def dedupLastWins(source: DataFrame, pk: Seq[String], ordinalCol: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(col(ordinalCol).desc)
+    val w = Window.partitionBy(pk.map(ColumnRef(_)): _*).orderBy(col(ordinalCol).desc)
     source.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", ordinalCol)
@@ -47,13 +48,14 @@ object Upsert {
     val sFlag = s.withColumn("__in_source", lit(true))
     val joined = tFlag.join(sFlag, pk, "full_outer")
     val outCols = (tCols ++ sCols.filterNot(tCols.contains)).map { c =>
-      if (pk.contains(c)) col(c)
+      if (pk.contains(c)) ColumnRef(c)
       else {
         val hasT = tCols.contains(c)
         val hasS = sCols.contains(c)
-        if (hasT && hasS) when(col("__in_source"), col(s"__s_$c")).otherwise(col(s"__t_$c")).as(c)
-        else if (hasS) col(s"__s_$c").as(c)
-        else col(s"__t_$c").as(c)
+        if (hasT && hasS)
+          when(col("__in_source"), ColumnRef(s"__s_$c")).otherwise(ColumnRef(s"__t_$c")).as(c)
+        else if (hasS) ColumnRef(s"__s_$c").as(c)
+        else ColumnRef(s"__t_$c").as(c)
       }
     }
     val action = when(col("__in_source") && col("__in_target"), lit("updated"))

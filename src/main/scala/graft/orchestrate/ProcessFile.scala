@@ -109,7 +109,7 @@ object ProcessFile {
         current_timestamp().as("ErrorTimestamp"),
         lit(filePath).as("SourceFile"),
         col("_row_idx").as("RowNumber"),
-        to_json(struct(bad.columns.filterNot(_ == "_row_idx").map(col).toSeq: _*))
+        to_json(struct(bad.columns.filterNot(_ == "_row_idx").map(ColumnRef(_)).toSeq: _*))
           .as("RawValue"))
       Ledger.writeErrors(spark, errs)
       // row-level quarantine dump (reference logs/<stem>_<jobrun>.txt :1049-1058)

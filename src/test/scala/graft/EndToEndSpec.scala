@@ -160,6 +160,42 @@ class EndToEndSpec extends GraftSuite {
     assert(spark.table("again_x").count() == 2)
   }
 
+  test("a dotted column name is a flat name: strict CSV and JSON loads, tolerant upsert merge") {
+    val strict = ProcessFile.run(spark, writeFile(tempDir("e2e_dot1"), "dot_strict.csv",
+      "id,unit.price,name\n1,2.50,a\n2,3.75,b\n"), cfg)
+    assert(strict.result.status == "Completed", strict.result.errorMessage)
+    val t = spark.table("dot_strict")
+    assert(t.schema("unit.price").dataType == DecimalType(18, 4))
+    assert(t.orderBy("id").collect().map(_.getDecimal(1).doubleValue).toSeq == Seq(2.5, 3.75))
+    val json = ProcessFile.run(spark, writeFile(tempDir("e2e_dot3"), "dot_json.json",
+      """[{"id": 1, "unit.price": 2.5, "unit.tags": {"a": 1}}]"""), cfg)
+    assert(json.result.status == "Completed", json.result.errorMessage)
+    val j = spark.table("dot_json")
+    assert(j.schema("unit.price").dataType == DecimalType(18, 4))
+    assert(j.head().getAs[String]("unit.tags") == """{"a":"1"}""")
+
+    // upsert + tolerant on a dotted key with a dotted NOT NULL column: the
+    // second file merges into the first and quarantines its one bad row
+    val c = cfg.copy(tableMode = TableMode.Upsert, transactionMode = TransactionMode.Tolerant,
+      tables = Map("dot_ups" -> TableOverride(None, Seq("item.id"), Map.empty)),
+      notNullColumns = Map("dot_ups" -> Seq("unit.price")))
+    val dir = tempDir("e2e_dot2")
+    assert(ProcessFile.run(spark, writeFile(dir, "dot_ups.csv",
+      "item.id,unit.price\n1,2.50\n2,3.75\n"), c).result.status == "Completed")
+    val job = ProcessFile.run(spark, writeFile(dir, "dot_ups.csv",
+      "item.id,unit.price\n2,4.00\n3,\n4,1.25\n"), c)
+    assert(job.result.status == "CompletedWithErrors", job.result.errorMessage)
+    assert(job.result.rowsInserted == 1 && job.result.rowsUpdated == 1 &&
+      job.result.rowsErrored == 1)
+    val rows = spark.table("dot_ups").orderBy("`item.id`").collect()
+      .map(r => r.getInt(0) -> r.getDecimal(1).doubleValue).toSeq
+    assert(rows == Seq(1 -> 2.5, 2 -> 4.0, 4 -> 1.25))
+    val errs = spark.table(Ledger.JobErrorTable).filter(col("JobRunID") === job.jobRunId)
+      .collect()
+    assert(errs.length == 1)
+    assert(errs.head.getAs[String]("RawValue").contains("\"item.id\":3"))
+  }
+
   test("batch directory run with checkpoint resume skipping completed files") {
     val dir = tempDir("e2e_batch")
     writeFile(dir, "batch_t1.csv", "name,age,city\nx,1,NY\ny,2,LA\nz,3,SF\n")
