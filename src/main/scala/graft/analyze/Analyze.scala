@@ -3,7 +3,7 @@ package graft.analyze
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{ColumnProfile, ColumnRef, InferredType, TableOverride}
+import graft.core.{ColumnProfile, ColumnRef, InferredType, NotNullGate, TableOverride}
 
 /** Profiling + type inference + cast planning — the analyze stage of the
   * engine (reference `analyze_file_structure` src/file-to-sql-loader.py:
@@ -75,6 +75,10 @@ object Analyze {
     "^[\\x00-\\x20\\x7F]*[+-]?(\\p{Nd}+\\.?\\p{Nd}*|\\.\\p{Nd}+)([eE][+-]?\\p{Nd}+)?" +
       "[\\x00-\\x20\\x7F]*\\z"
 
+  /** What [[profile]] learns from one file: its row count, one
+    * [[ColumnProfile]] per column, and its NOT NULL gate. */
+  final case class FileProfile(rows: Long, columns: Seq[ColumnProfile], notNull: NotNullGate)
+
   /** One-pass whole-table profile: the row count, and for each string
     * column max length, null presence, forall-int / forall-decimal /
     * forall-datetime (counting convention: #valid == #present), int32 fit,
@@ -84,8 +88,17 @@ object Analyze {
     * guard (above), so no cell throws. There is one integral cast: a value
     * fits INT exactly when its long fits the int32 range (the int and long
     * casts accept one grammar), so int32 fit is read off the long cast's
-    * min and max. */
-  def profile(df: DataFrame): (Long, Seq[ColumnProfile]) = {
+    * min and max.
+    *
+    * The same aggregate counts the rows in which any of `notNull` is
+    * absent: the NOT NULL gate's bad count. Inference reads every value,
+    * so every present value casts to its inferred type, and after
+    * [[castPlan]] a value is null exactly when it is absent here. A
+    * `notNull` name picks the column the analyzer's resolver matches, as
+    * it does for `Loader`'s split (case-insensitively unless
+    * `spark.sql.caseSensitive` is set); one that names no column is left
+    * to the split, which fails the load. */
+  def profile(df: DataFrame, notNull: Seq[String] = Nil): FileProfile = {
     val cols = df.schema.fields.map(_.name).toSeq
     val aggs: Seq[Column] = cols.flatMap { name =>
       val c = ColumnRef(name)
@@ -105,9 +118,13 @@ object Analyze {
         sum(when(present && parseDatetimeAll(trimmed).isNotNull, 1L).otherwise(0L))
           .as(s"${name}__dts"))
     }
-    val row: Row = df.agg(count(lit(1)).as("__rows"), aggs: _*).head()
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val gated = cols.filter(c => notNull.exists(resolver(_, c)))
+    val anyAbsent = gated.map(c => isAbsent(ColumnRef(c))).foldLeft(lit(false))(_ || _)
+    val row: Row = df.agg(count(lit(1)).as("__rows"),
+      aggs :+ sum(when(anyAbsent, 1L).otherwise(0L)).as("__notnull_absent"): _*).head()
     def l(k: String): Long = Option(row.getAs[Any](k)).map(_.toString.toLong).getOrElse(0L)
-    l("__rows") -> cols.map { name =>
+    FileProfile(l("__rows"), cols.map { name =>
       val present = l(s"${name}__present")
       val ints = l(s"${name}__ints")
       ColumnProfile(
@@ -120,7 +137,7 @@ object Analyze {
         intFitsInt32 = ints == 0 ||
           (l(s"${name}__minint") >= Int.MinValue && l(s"${name}__maxint") <= Int.MaxValue),
         nonNullCount = present)
-    }
+    }, NotNullGate(notNull, l("__notnull_absent")))
   }
 
   /** Fixed-width numeric histogram: one partial-aggregated groupBy on the

@@ -74,6 +74,12 @@ final case class ColumnProfile(
     intFitsInt32: Boolean,
     nonNullCount: Long)
 
+/** The NOT NULL gate of one file: the NOT NULL names configured for its
+  * table, and the number of rows in which any of them is absent. Both come
+  * from `analyze.Analyze.profile`, so `load.Loader` splits on exactly the
+  * names its bad count was taken over and runs no count job of its own. */
+final case class NotNullGate(columns: Seq[String], absentRows: Long)
+
 /** Existing-table handling (reference :908-926). */
 sealed trait TableMode { def name: String }
 object TableMode {

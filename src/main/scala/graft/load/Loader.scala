@@ -43,8 +43,9 @@ import graft.core._
 object Loader {
 
   /** Validity split: `good` rows satisfy all NOT NULL constraints after
-    * casting; `bad` rows violate at least one. */
-  private def split(castDf: DataFrame, notNull: Seq[String]): (DataFrame, DataFrame) = {
+    * casting; `bad` rows violate at least one. A constraint on a column
+    * the frame lacks fails analysis here. */
+  private[graft] def split(castDf: DataFrame, notNull: Seq[String]): (DataFrame, DataFrame) = {
     if (notNull.isEmpty) (castDf, castDf.limit(0))
     else {
       val ok = notNull.foldLeft(lit(true))((acc, c) => acc && ColumnRef(c).isNotNull)
@@ -53,17 +54,20 @@ object Loader {
   }
 
   /** Loads the cast rows of one file into `table` under `config`'s table
-    * and transaction modes (see the table above). Returns the result and
-    * the bad rows the error ledger should record, if any. */
+    * and transaction modes (see the table above). Rows missing a column of
+    * `gate` go to the bad side, and `gate.absentRows` is their number:
+    * `ProcessFile` takes the gate from `Analyze.profile`, so it runs no job
+    * of its own. Returns the result and the bad rows the error ledger
+    * should record, if any. */
   def load(spark: SparkSession, casted: DataFrame, table: String, config: EngineConfig,
-      sink: TableSink = CatalogSink): (LoadResult, Option[DataFrame]) = {
+      gate: NotNullGate, sink: TableSink = CatalogSink): (LoadResult, Option[DataFrame]) = {
     val mode = config.tableMode
     if (mode == TableMode.Fail && sink.exists(spark, table))
       throw new IllegalStateException(s"table $table already exists (table_mode=fail)")
 
-    val (good, bad) = split(casted, config.notNullColumns.getOrElse(table, Nil))
+    val (good, bad) = split(casted, gate.columns)
+    val nBad = gate.absentRows
     val strict = config.transactionMode == TransactionMode.Strict
-    val nBad = bad.count()
     val logged = if (strict || nBad == 0) None else Some(bad)
     if (nBad > (if (strict) 0 else config.maxRowErrors)) {
       val why =

@@ -1,5 +1,6 @@
 package graft.orchestrate
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import graft.core._
 import graft.ingest.Detect
@@ -61,11 +62,11 @@ object BatchRunner {
         Ledger.findResumableBatch(spark, inputDir, config.maxResumeAgeHours)
       else None
 
-    val (batchId, priorProcessed, priorFailed, isResumed) = resumed match {
+    val (batchId, isResumed) = resumed match {
       case Some(b) =>
         Ledger.writeBatchStats(spark, b.copy(IsResumed = true, BatchStatus = "InProgress",
           OriginalBatchJobID = b.OriginalBatchJobID.orElse(Some(b.BatchJobID))))
-        (b.BatchJobID, b.FilesProcessed, b.FilesFailed, true)
+        (b.BatchJobID, true)
       case None =>
         val id = java.util.UUID.randomUUID().toString
         Ledger.writeBatchStats(spark, BatchStats(
@@ -73,15 +74,29 @@ object BatchRunner {
           BatchEndTime = None, BatchStatus = "InProgress",
           TotalFiles = allFiles.size, FilesProcessed = 0, FilesFailed = 0,
           IsResumed = false, OriginalBatchJobID = None))
-        (id, 0L, 0L, false)
+        (id, false)
     }
 
     // C4: pending = all − completed (anti-join; file set is driver-small —
-    // one path string per file — so the difference runs driver-side)
-    val done: Set[String] =
-      if (isResumed)
-        Ledger.completedFiles(spark, batchId).collect().map(_.getString(0)).toSet
-      else Set.empty
+    // one path string per file — so the difference runs driver-side). The
+    // roll-up counts the earlier runs' files from their job rows, not from
+    // the batch row, which a crashed run left at its start counts.
+    val prior: Map[String, Ledger.LastJob] =
+      if (isResumed) Ledger.lastJobs(spark, batchId) else Map.empty
+    val done = prior.collect { case (f, j) if j.status != "Failed" => f }.toSet
+    // a run that crashed between a file's ledger row and its move left a
+    // Completed file in the inbox: finish the move, or the next batch
+    // would load it again. A file modified after that job started is a
+    // later arrival under the same name, not the file the job loaded: it
+    // stays in the inbox for the next batch.
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def modified(f: String): Long = {
+      val p = new Path(f)
+      p.getFileSystem(hconf).getFileStatus(p).getModificationTime
+    }
+    allFiles.filter(f => done(f) && modified(f) <= prior(f).started.getTime)
+      .flatMap(ProcessFile.moveFile(spark, _, "processed"))
+      .foreach(m => System.err.println(s"$now ERROR $m"))
     val pending = allFiles.filterNot(done.contains)
 
     // J3: per-file retry loop — retries BOTH thrown errors and Failed
@@ -162,8 +177,11 @@ object BatchRunner {
     // jobs surface in listing order regardless of completion order, so
     // the outcome (and the rendered report) is parallelism-invariant
     val jobs = pending.map(jobByFile)
-    val processed = priorProcessed + jobs.count(_.result.status != "Failed")
-    val failed = priorFailed + jobs.count(_.result.status == "Failed")
+    val statuses = prior.map { case (f, j) => f -> j.status } ++
+      jobs.map(j => j.sourceFile -> j.result.status)
+    val failed = statuses.values.count(_ == "Failed").toLong
+    val processed = statuses.size - failed
+    val totalFiles = (allFiles.toSet ++ prior.keySet).size.toLong
 
     // E3: roll-up + final status (reference :1601-1638)
     val status =
@@ -174,13 +192,12 @@ object BatchRunner {
       BatchJobID = batchId, DirectoryPath = inputDir,
       BatchStartTime = resumed.map(_.BatchStartTime).getOrElse(now),
       BatchEndTime = Some(new java.sql.Timestamp(System.currentTimeMillis())),
-      BatchStatus = status, TotalFiles = allFiles.size + done.size,
+      BatchStatus = status, TotalFiles = totalFiles,
       FilesProcessed = processed, FilesFailed = failed,
       IsResumed = isResumed,
       OriginalBatchJobID = resumed.flatMap(_.OriginalBatchJobID)))
 
-    val outcome = BatchOutcome(batchId, status, allFiles.size + done.size,
-      processed, failed, jobs)
+    val outcome = BatchOutcome(batchId, status, totalFiles, processed, failed, jobs)
     if (config.emailEnabled)
       Report.writeBatchReport(spark, outcome, config)
     outcome

@@ -42,9 +42,13 @@ object ProcessFile {
     val table = overrides.overrideTableName.getOrElse(stem)
 
     // A6: empty input — upsert ⇒ success no-op, others ⇒ fail (:1420-1432);
-    // the row count rides the profile aggregate, no separate emptiness job
-    val (nRows, profiles) = if (raw.columns.isEmpty) (0L, Nil) else Analyze.profile(raw)
-    if (nRows == 0) {
+    // the row count and the NOT NULL gate's bad count ride the profile
+    // aggregate, so neither needs a job of its own
+    val notNull = config.notNullColumns.getOrElse(table, Nil)
+    val profile =
+      if (raw.columns.isEmpty) Analyze.FileProfile(0L, Nil, NotNullGate(notNull, 0L))
+      else Analyze.profile(raw, notNull)
+    if (profile.rows == 0) {
       val (status, err) =
         if (config.tableMode == TableMode.Upsert) ("Completed", None)
         else ("Failed", Some("empty input file"))
@@ -54,8 +58,7 @@ object ProcessFile {
       return FileJob(jobRunId, filePath, table, result, "")
     }
 
-    val notNull = config.notNullColumns.getOrElse(table, Nil)
-    val inferred = Analyze.inferSchema(profiles, overrides, notNull)
+    val inferred = Analyze.inferSchema(profile.columns, overrides, notNull)
     val types = inferred.map { case (p, t, _) => (p.name, t) }
     val ddl = Ddl.render(table, inferred.map { case (p, t, n) => (p.name, t, n) })
 
@@ -63,7 +66,7 @@ object ProcessFile {
       try {
         val casted = Analyze.castPlan(Reader.withRowIndex(raw),
           types :+ ("_row_idx" -> InferredType.BigIntType))
-        Loader.load(spark, casted, table, config, sink)
+        Loader.load(spark, casted, table, config, profile.notNull, sink)
       } catch {
         case e: Exception =>
           (LoadResult("Failed", -1, 0, 0, -1, Some(e.getMessage)), None)
@@ -170,7 +173,8 @@ object ProcessFile {
   /** Moves the file into `sub/` next to it, replacing an older file of the
     * same name there (the reference's `os.rename`). Returns the error when
     * the file is still in place, since the next run would load it again. */
-  private def moveFile(spark: SparkSession, filePath: String, sub: String): Option[String] = {
+  private[orchestrate] def moveFile(spark: SparkSession, filePath: String, sub: String)
+      : Option[String] = {
     val p = new Path(filePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Option(p.getParent).flatMap { parent =>

@@ -73,7 +73,7 @@ class AnalyzeSpec extends GraftSuite {
 
   private def profileOf(values: Seq[String], name: String = "c") = {
     val df = values.toDF(name)
-    Analyze.profile(df)._2.head
+    Analyze.profile(df).columns.head
   }
 
   test("ISO dates infer TimestampType (the intended semantics, SURVEY §1.2)") {
@@ -225,7 +225,7 @@ class ProfileGuardSpec extends GraftSuite {
   private def assertSame(columns: Seq[Seq[String]]): Unit =
     columns.grouped(100).foreach { batch =>
       val df = frame(batch)
-      val (rows, got) = Analyze.profile(df)
+      val Analyze.FileProfile(rows, got, _) = Analyze.profile(df)
       val (refRows, want) = reference(df)
       assert(rows == refRows)
       got.zip(want).zip(batch).foreach { case ((g, w), values) =>

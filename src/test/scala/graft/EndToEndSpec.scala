@@ -196,6 +196,86 @@ class EndToEndSpec extends GraftSuite {
     assert(errs.head.getAs[String]("RawValue").contains("\"item.id\":3"))
   }
 
+  test("a NOT NULL column absent from the file fails the load with one job-stats row") {
+    val dir = tempDir("e2e_nn_missing")
+    val f = writeFile(dir, "nn_missing.csv", "id,name\n1,a\n2,\n")
+    val job = ProcessFile.run(spark, f,
+      cfg.copy(notNullColumns = Map("nn_missing" -> Seq("id", "email"))))
+    assert(job.result.status == "Failed", job.result)
+    assert(Ledger.jobStats(spark).filter(col("JobRunID") === job.jobRunId).count() == 1)
+    assert(Files.exists(dir.resolve("error/nn_missing.csv")))
+    assert(!spark.catalog.tableExists("nn_missing"))
+  }
+
+  /** The ledger a batch that crashed mid-run leaves behind: its batch row
+    * as written at the start, and a Completed job row per finished file. */
+  private def crashedBatch(dir: java.nio.file.Path, total: Int, finished: Seq[String]): String = {
+    val id = java.util.UUID.randomUUID().toString
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    Ledger.writeBatchStats(spark, BatchStats(id, dir.toString, now, None, "InProgress",
+      total, 0, 0, IsResumed = false, OriginalBatchJobID = None))
+    finished.foreach { name =>
+      Ledger.writeJobStats(spark, JobStats(java.util.UUID.randomUUID().toString, now, now, 0,
+        "Completed", new org.apache.hadoop.fs.Path(dir.resolve(name).toUri).toString,
+        graft.analyze.Ddl.tableName(name), 1, 1, 0, 0, None, Some(id),
+        cfg.tableMode.name, cfg.transactionMode.name))
+    }
+    id
+  }
+
+  test("a resumed batch rolls up the files its crashed run finished from their job rows") {
+    val dir = tempDir("e2e_rollup")
+    // the crashed run loaded and moved the first file; its batch row still
+    // says FilesProcessed = 0
+    writeFile(Files.createDirectories(dir.resolve("processed")), "rollup_a.csv", "id\n1\n")
+    writeFile(dir, "rollup_b.csv", "id\n2\n")
+    val id = crashedBatch(dir, 2, Seq("rollup_a.csv"))
+    val out = BatchRunner.run(spark, dir.toString, cfg)
+    assert(out.batchJobId == id && out.jobs.size == 1)
+    assert((out.status, out.totalFiles, out.processed, out.failed) == ("Completed", 2L, 2L, 0L))
+    val b = Ledger.currentBatches(spark).filter(col("BatchJobID") === id).head()
+    assert(b.getAs[Long]("TotalFiles") == 2 && b.getAs[Long]("FilesProcessed") == 2)
+  }
+
+  test("a resume moves a Completed file its crashed run left in the inbox, so it loads once") {
+    val dir = tempDir("e2e_unmoved")
+    val c = cfg.copy(tableMode = TableMode.Append)
+    // the crashed run appended the file's 2 rows and wrote its Completed
+    // row, then stopped before the move
+    val f = writeFile(dir, "unmoved_t.csv", "id,v\n1,a\n2,b\n")
+    val id = crashedBatch(dir, 1, Nil)
+    val loaded = ProcessFile.run(spark, "file:" + f, c, Some(id))
+    assert(loaded.result.status == "Completed", loaded.result)
+    Files.move(dir.resolve("processed/unmoved_t.csv"), dir.resolve("unmoved_t.csv"))
+
+    val resumed = BatchRunner.run(spark, dir.toString, c)
+    assert(resumed.batchJobId == id && resumed.jobs.isEmpty)
+    assert((resumed.status, resumed.totalFiles, resumed.processed) == ("Completed", 1L, 1L))
+    assert(!Files.exists(dir.resolve("unmoved_t.csv")))
+    assert(Files.exists(dir.resolve("processed/unmoved_t.csv")))
+    BatchRunner.run(spark, dir.toString, c)
+    assert(spark.table("unmoved_t").count() == 2)
+  }
+
+  test("a resume leaves a same-named file that arrived after the crash for the next batch") {
+    val dir = tempDir("e2e_rearrived")
+    val c = cfg.copy(tableMode = TableMode.Append)
+    // the crashed run loaded and moved the first rearrived_t.csv and
+    // wrote its Completed row; then a new file of the same name arrived
+    val f = writeFile(dir, "rearrived_t.csv", "id,v\n1,a\n2,b\n")
+    val id = crashedBatch(dir, 1, Nil)
+    val loaded = ProcessFile.run(spark, "file:" + f, c, Some(id))
+    assert(loaded.result.status == "Completed", loaded.result)
+    writeFile(dir, "rearrived_t.csv", "id,v\n3,c\n4,d\n")
+
+    val resumed = BatchRunner.run(spark, dir.toString, c)
+    assert(resumed.batchJobId == id && resumed.jobs.isEmpty)
+    assert(Files.exists(dir.resolve("rearrived_t.csv")))
+    BatchRunner.run(spark, dir.toString, c)
+    val ids = spark.table("rearrived_t").select("id").collect().map(_.getInt(0)).sorted.toSeq
+    assert(ids == Seq(1, 2, 3, 4))
+  }
+
   test("batch directory run with checkpoint resume skipping completed files") {
     val dir = tempDir("e2e_batch")
     writeFile(dir, "batch_t1.csv", "name,age,city\nx,1,NY\ny,2,LA\nz,3,SF\n")

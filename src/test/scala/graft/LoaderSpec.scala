@@ -12,6 +12,8 @@ object LoadConf {
     EngineConfig.default.copy(tableMode = mode, transactionMode = txn,
       notNullColumns = notNull, maxRowErrors = maxRowErrors)
   val upsert: EngineConfig = apply(TableMode.Upsert)
+  /** The NOT NULL gate of a frame with no NOT NULL column. */
+  val noGate: NotNullGate = NotNullGate(Nil, 0L)
 }
 
 class UpsertSpec extends GraftSuite {
@@ -96,18 +98,18 @@ class UpsertSpec extends GraftSuite {
     // strict insert (drop_recreate)
     val df = Seq(("1", "x"), ("2", "y")).toDF("id", "name")
     val (r1, _) = Loader.load(spark, df, "jdbc_t",
-      LoadConf(TableMode.DropRecreate, notNull = Map("jdbc_t" -> Seq("id"))), sink)
+      LoadConf(TableMode.DropRecreate), NotNullGate(Seq("id"), 0L), sink)
     assert(r1.status == "Completed" && r1.rowsInserted == 2)
     assert(sink.read(spark, "jdbc_t").count() == 2)
     assert(sink.exists(spark, "jdbc_t"))
     // upsert: create then merge + RENAME TABLE swap, all over JDBC
     val s1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.load(spark, s1, "jdbc_u", LoadConf.upsert, sink)._1
+    val r2 = Loader.load(spark, s1, "jdbc_u", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r2.rowsInserted == 2)
     val s2 = Seq((2, "b2"), (3, "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r3 = Loader.load(spark, s2, "jdbc_u", LoadConf.upsert, sink)._1
+    val r3 = Loader.load(spark, s2, "jdbc_u", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r3.rowsInserted == 1 && r3.rowsUpdated == 1)
     val rows = sink.read(spark, "jdbc_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
@@ -120,7 +122,7 @@ class UpsertSpec extends GraftSuite {
     val swapSink = sink.copy(mergePushdown = false)
     val s3 = Seq((3, "c3"), (4, "d")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r4 = Loader.load(spark, s3, "jdbc_u", LoadConf.upsert, swapSink)._1
+    val r4 = Loader.load(spark, s3, "jdbc_u", LoadConf.upsert, LoadConf.noGate, swapSink)._1
     assert(r4.rowsInserted == 1 && r4.rowsUpdated == 1)
     val rows2 = sink.read(spark, "jdbc_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
@@ -139,11 +141,11 @@ class UpsertSpec extends GraftSuite {
       dialect = "derby")
     val s1 = Seq(("k1", "a"), ("k2", "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r1 = Loader.load(spark, s1, "jdbc_clob", LoadConf.upsert, sink)._1
+    val r1 = Loader.load(spark, s1, "jdbc_clob", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r1.rowsInserted == 2)
     val s2 = Seq(("k2", "b2"), ("k3", "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.load(spark, s2, "jdbc_clob", LoadConf.upsert, sink)._1
+    val r2 = Loader.load(spark, s2, "jdbc_clob", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r2.status == "Completed", s"load must not fail: ${r2.errorMessage}")
     assert(r2.rowsInserted == 1 && r2.rowsUpdated == 1)
     val rows = sink.read(spark, "jdbc_clob").orderBy("id").collect()
@@ -160,9 +162,9 @@ class UpsertSpec extends GraftSuite {
     init.write.format("parquet").saveAsTable(t1)
     val src = Seq((2, "b2"), (3, "c")).toDF("id", "name")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r1 = Loader.load(spark, src, t1, LoadConf.upsert)._1
+    val r1 = Loader.load(spark, src, t1, LoadConf.upsert, LoadConf.noGate)._1
     val after1 = spark.table(t1).orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    val r2 = Loader.load(spark, src, t1, LoadConf.upsert)._1
+    val r2 = Loader.load(spark, src, t1, LoadConf.upsert, LoadConf.noGate)._1
     val after2 = spark.table(t1).orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(after1 == Seq((1, "a"), (2, "b2"), (3, "c")))
     assert(after1 == after2)
@@ -178,7 +180,7 @@ class LoaderSpec extends GraftSuite {
     val t = s"strict_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y")).toDF("id", "name")
     val (r, logged) = Loader.load(spark, df, t,
-      LoadConf(TableMode.DropRecreate, notNull = Map(t -> Seq("id"))))
+      LoadConf(TableMode.DropRecreate), NotNullGate(Seq("id"), 1L))
     assert(r.status == "Failed" && r.rowsErrored == 1 && logged.isEmpty)
   }
 
@@ -186,7 +188,7 @@ class LoaderSpec extends GraftSuite {
     val t = s"tol_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y"), ("3", "z")).toDF("id", "name")
     val (r, logged) = Loader.load(spark, df, t, LoadConf(TableMode.DropRecreate,
-      TransactionMode.Tolerant, Map(t -> Seq("id")), maxRowErrors = 1))
+      TransactionMode.Tolerant, maxRowErrors = 1), NotNullGate(Seq("id"), 1L))
     assert(logged.map(_.count()).contains(1L))
     assert(r.status == "CompletedWithErrors")
     assert(r.rowsInserted == 2 && r.rowsErrored == 1)
@@ -197,7 +199,7 @@ class LoaderSpec extends GraftSuite {
     val t = s"tolrej_${System.nanoTime()}"
     val df = Seq(("1", "x"), (null, "y"), (null, "z")).toDF("id", "name")
     val (r, logged) = Loader.load(spark, df, t, LoadConf(TableMode.DropRecreate,
-      TransactionMode.Tolerant, Map(t -> Seq("id")), maxRowErrors = 1))
+      TransactionMode.Tolerant, maxRowErrors = 1), NotNullGate(Seq("id"), 2L))
     assert(r.status == "Failed" && r.rowsErrored == 2)
     assert(logged.map(_.count()).contains(2L), "over-budget tolerant rows still reach the ledger")
   }
@@ -224,7 +226,7 @@ class LoaderSpec extends GraftSuite {
     val t = s"failmode_${System.nanoTime()}"
     Seq((1, "a")).toDF("id", "v").write.format("parquet").saveAsTable(t)
     intercept[IllegalStateException] {
-      Loader.load(spark, Seq((2, "b")).toDF("id", "v"), t, LoadConf(TableMode.Fail))
+      Loader.load(spark, Seq((2, "b")).toDF("id", "v"), t, LoadConf(TableMode.Fail), LoadConf.noGate)
     }
   }
 
@@ -259,17 +261,17 @@ class LoaderSpec extends GraftSuite {
     // strict insert
     val df = Seq(("1", "x"), ("2", "y")).toDF("id", "name")
     val (r1, _) = Loader.load(spark, df, "mem_t",
-      LoadConf(TableMode.DropRecreate, notNull = Map("mem_t" -> Seq("id"))), sink)
+      LoadConf(TableMode.DropRecreate), NotNullGate(Seq("id"), 0L), sink)
     assert(r1.status == "Completed" && r1.rowsInserted == 2)
     assert(sink.tables("mem_t").count() == 2)
     // upsert: create, then merge + swap through the sink
     val src1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r2 = Loader.load(spark, src1, "mem_u", LoadConf.upsert, sink)._1
+    val r2 = Loader.load(spark, src1, "mem_u", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r2.rowsInserted == 2)
     val src2 = Seq((2, "b2"), (3, "c")).toDF("id", "v")
       .withColumn("_row_idx", monotonically_increasing_id())
-    val r3 = Loader.load(spark, src2, "mem_u", LoadConf.upsert, sink)._1
+    val r3 = Loader.load(spark, src2, "mem_u", LoadConf.upsert, LoadConf.noGate, sink)._1
     assert(r3.rowsInserted == 1 && r3.rowsUpdated == 1)
     val rows = sink.tables("mem_u").orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
