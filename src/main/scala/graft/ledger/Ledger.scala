@@ -1,9 +1,18 @@
 package graft.ledger
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, SaveMode, SparkSession}
+import java.util.UUID
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{BatchStats, ColumnRef, JobError, JobStats}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.{BatchStats, JobError, JobStats}
 
 /** Job/batch ledger — the reference's three system tables
   * (EtlJobStatistics :511-525, EtlJobError :548-557,
@@ -18,14 +27,33 @@ import graft.core.{BatchStats, ColumnRef, JobError, JobStats}
   * All three tables are tiny relative to data volume (one row per
   * file-job / error / batch transition).
   *
-  * Fixed cost per append: the tables are checked (and created if missing)
-  * once per `SparkSession`, not on every append, and each append is a
-  * position-based `insertInto` of a frame built in its table's column
-  * order (the [[JobStats]] / [[BatchStats]] encoder plus `_version_ts`;
-  * the [[JobError]] encoder). So after a session's first ledger call an
-  * append makes no `tableExists` call, looks up no table schema and runs
-  * no create-as-select. A table dropped mid-session is re-created by the
-  * next call that finds it missing, which then goes through.
+  * Write path: an append is one parquet file that the driver writes into
+  * the table's directory, with no Spark job. The rows are encoded by the
+  * table's [[JobStats]] / [[JobError]] / [[BatchStats]] encoder, in its
+  * column order, plus `_version_ts` on the two versioned tables. The file
+  * goes through Spark's own parquet writer factory, which takes the
+  * timestamp type, legacy format and compression from the session, so a
+  * driver-written file encodes like one an `insertInto` wrote and both can
+  * sit in one table.
+  *
+  * Publish: the file is written under a `_`-prefixed name, which Spark's
+  * file listing skips, then renamed to `part-<uuid>.<codec>.parquet`, and
+  * the table is refreshed. A reader sees a whole append or none of it, and
+  * a crash before the rename leaves no visible row.
+  *
+  * No stats: the tables are created empty (`CREATE TABLE … USING parquet`,
+  * not a create-as-select), so the catalog records no size, and nothing
+  * records one later. The planner sizes a ledger table from its files,
+  * which the refresh re-lists, instead of from a catalog figure that the
+  * appends would leave stale.
+  *
+  * The tables are checked (and created if missing) once per
+  * `SparkSession`. An append first checks that the table's directory is
+  * still there: dropping a managed table deletes it, so a table dropped
+  * mid-session is re-created as a managed table before the new file is
+  * written. A table dropped with its directory kept is found missing by
+  * the refresh, after the rename; it is then re-attached over that
+  * directory, new file included. The row is never written twice.
   */
 object Ledger {
 
@@ -33,91 +61,142 @@ object Ledger {
   val JobErrorTable  = "etl_job_error"
   val BatchStatsTable = "etl_batch_job_statistics"
 
-  /** Serializes ledger appends across driver threads (the parallel
-    * batch runner, r15): the rows are single-digit-millisecond writes,
-    * but `ensureTables`' exists-then-create and two concurrent appends
-    * into ONE catalog table would race — the ledger is the one piece of
-    * state every parallel file job shares, so it takes the one lock.
-    * Data loads never hold it (the batch runner keeps same-target-table
-    * files sequential instead). */
+  /** Serializes the ledger's catalog work across driver threads (the
+    * parallel batch runner, r15): `ensureTables`' exists-then-create, a
+    * drop check and the re-creation it may start, and each append's
+    * rename and refresh. The append's file itself is written outside the
+    * lock under a name no other append uses, so a long error-row read
+    * does not hold up other tables' loads. Data loads never hold it (the
+    * batch runner keeps same-target-table files sequential instead). */
   private val writeLock = new Object
 
-  /** Sessions whose three tables are known to exist. Guarded by
-    * [[writeLock]]; weak, so a stopped session does not stay reachable. */
-  private val checked = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+  /** One ledger table: its name, its columns and how a row is encoded.
+    * The schema keeps the encoder's nullability, as an `insertInto` of the
+    * encoded rows would write it. */
+  private final class Table[T](val name: String, encoder: ExpressionEncoder[T],
+      versioned: Boolean) {
+    val schema: StructType = StructType(encoder.schema.fields ++
+      (if (versioned) Seq(StructField("_version_ts", LongType, nullable = false)) else Nil))
 
-  private val JobErrorColumns: Seq[String] =
-    Encoders.product[JobError].schema.fieldNames.toSeq
-
-  /** Create-if-missing for the three catalog tables, once per session.
-    * Holds [[writeLock]] itself (r15 advice): the exists-then-create pair
-    * races table creation if two threads run it concurrently. The lock is
-    * reentrant, so the write sinks (which already hold it) are
-    * unchanged. */
-  def ensureTables(spark: SparkSession): Unit = writeLock.synchronized {
-    if (!checked.containsKey(spark)) {
-      createMissing(spark)
-      checked.put(spark, true)
+    /** The rows as the table's columns; one `_version_ts` per append. */
+    def encode(rows: Iterator[T]): Iterator[InternalRow] = {
+      val toRow = encoder.createSerializer()
+      if (!versioned) rows.map(toRow)
+      else {
+        val version = InternalRow(System.nanoTime())
+        rows.map(r => new JoinedRow(toRow(r), version))
+      }
     }
   }
 
-  private def createMissing(spark: SparkSession): Unit = {
-    import spark.implicits._
-    def ensure(name: String, empty: => DataFrame): Unit =
-      if (!spark.catalog.tableExists(name)) {
-        try empty.write.format("parquet").saveAsTable(name)
-        catch {
-          // catalog lost but warehouse data survived (e.g. in-memory catalog
-          // across JVMs): re-attach the existing location as the table
-          case e: Exception if Option(e.getMessage).exists(_.contains("LOCATION_ALREADY_EXISTS")) =>
-            val loc = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + s"/$name"
-            val ddlCols = empty.schema.fields
-              .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-            spark.sql(s"CREATE TABLE `$name` ($ddlCols) USING parquet LOCATION '$loc'")
-        }
-      }
-    ensure(JobStatsTable,
-      Seq.empty[JobStats].toDS.toDF.withColumn("_version_ts", lit(0L)))
-    ensure(JobErrorTable, Seq.empty[JobError].toDS.toDF)
-    ensure(BatchStatsTable,
-      Seq.empty[BatchStats].toDS.toDF.withColumn("_version_ts", lit(0L)))
+  private val JobStatsT = new Table(JobStatsTable, ExpressionEncoder[JobStats](), versioned = true)
+  private val JobErrorT = new Table(JobErrorTable, ExpressionEncoder[JobError](), versioned = false)
+  private val BatchStatsT =
+    new Table(BatchStatsTable, ExpressionEncoder[BatchStats](), versioned = true)
+  private val Tables = Seq(JobStatsT, JobErrorT, BatchStatsT)
+
+  /** Each session's table directories, once its three tables are known to
+    * exist. Guarded by [[writeLock]]; weak, so a stopped session does not
+    * stay reachable. */
+  private val dirs = new java.util.WeakHashMap[SparkSession, Map[String, Path]]()
+
+  /** Create-if-missing for the three catalog tables, once per session. */
+  def ensureTables(spark: SparkSession): Unit = tableDirs(spark)
+
+  private def tableDirs(spark: SparkSession): Map[String, Path] = writeLock.synchronized {
+    Option(dirs.get(spark)).getOrElse {
+      val found = Tables.map(t => t.name -> ensure(spark, t)).toMap
+      dirs.put(spark, found)
+      found
+    }
   }
 
-  /** Runs `body` against tables [[ensureTables]] has seen. If one of them
-    * was dropped since, `body` fails to resolve it: the tables are checked
-    * again and `body` runs once more. */
-  private def withTables[A](spark: SparkSession)(body: => A): A =
-    writeLock.synchronized {
-      ensureTables(spark)
-      try body
+  /** Creates `t` empty if it is missing and returns its directory. */
+  private def ensure(spark: SparkSession, t: Table[_]): Path = {
+    val catalog = spark.sessionState.catalog
+    val id = TableIdentifier(t.name)
+    if (!catalog.tableExists(id)) {
+      val cols = t.schema.fields.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+      try spark.sql(s"CREATE TABLE `${t.name}` ($cols) USING parquet")
       catch {
-        case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" =>
-          checked.remove(spark)
-          ensureTables(spark)
-          body
+        // catalog lost but warehouse data survived (e.g. in-memory catalog
+        // across JVMs): re-attach the existing location as the table
+        case e: Exception if Option(e.getMessage).exists(_.contains("LOCATION_ALREADY_EXISTS")) =>
+          spark.sql(s"CREATE TABLE `${t.name}` ($cols) USING parquet " +
+            s"LOCATION '${catalog.defaultTablePath(id)}'")
       }
     }
+    new Path(catalog.getTableMetadata(id).location)
+  }
+
+  private def forget(spark: SparkSession): Unit = writeLock.synchronized(dirs.remove(spark))
+
+  private def notFound(e: AnalysisException): Boolean =
+    e.getCondition == "TABLE_OR_VIEW_NOT_FOUND"
 
   // --- sinks (I11-I13) --------------------------------------------------
 
-  /** Appends `rows`, whose columns are in `table`'s column order. */
-  private def append(spark: SparkSession, table: String, rows: => DataFrame): Unit =
-    withTables(spark)(rows.write.mode(SaveMode.Append).insertInto(table))
+  /** Appends `rows` to `t` as one new file; no file if there are none. */
+  private def append[T](spark: SparkSession, t: Table[T], rows: Iterator[T]): Unit =
+    if (rows.hasNext) {
+      val hidden = writeHidden(spark, liveDir(spark, t), t.schema, t.encode(rows))
+      publish(spark, t, hidden)
+    }
 
-  def writeJobStats(spark: SparkSession, stats: JobStats): Unit = {
-    import spark.implicits._
-    append(spark, JobStatsTable,
-      Seq(stats).toDS.toDF.withColumn("_version_ts", lit(System.nanoTime())))
+  /** `t`'s directory, re-creating the table first if it was dropped. */
+  private def liveDir(spark: SparkSession, t: Table[_]): Path = writeLock.synchronized {
+    val dir = tableDirs(spark)(t.name)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) dir
+    else { forget(spark); tableDirs(spark)(t.name) }
   }
 
-  def writeErrors(spark: SparkSession, errors: DataFrame): Unit =
-    append(spark, JobErrorTable, errors.select(JobErrorColumns.map(ColumnRef(_)): _*))
-
-  def writeBatchStats(spark: SparkSession, b: BatchStats): Unit = {
-    import spark.implicits._
-    append(spark, BatchStatsTable,
-      Seq(b).toDS.toDF.withColumn("_version_ts", lit(System.nanoTime())))
+  /** Writes `rows` into `dir` as one parquet file under a hidden name, with
+    * the writer a Spark table write uses under this session's settings. */
+  private def writeHidden(spark: SparkSession, dir: Path, schema: StructType,
+      rows: Iterator[InternalRow]): Path = {
+    val conf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(conf, job, schema,
+      new ParquetOptions(Map.empty[String, String], conf))
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("ledger", 0), TaskType.MAP, 0), 0))
+    val file = new Path(dir, s"_part-${UUID.randomUUID()}${factory.getFileExtension(task)}")
+    val out = factory.newInstance(file.toString, schema, task)
+    try { rows.foreach(out.write); out.close() }
+    catch {
+      case e: Throwable =>
+        scala.util.Try(out.close())
+        file.getFileSystem(job.getConfiguration).delete(file, false)
+        throw e
+    }
+    file
   }
+
+  /** Makes the hidden file visible and refreshes the table's listing. */
+  private def publish(spark: SparkSession, t: Table[_], hidden: Path): Unit =
+    writeLock.synchronized {
+      val fs = hidden.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val visible = new Path(hidden.getParent, hidden.getName.stripPrefix("_"))
+      if (!fs.rename(hidden, visible))
+        throw new java.io.IOException(s"could not rename $hidden to $visible")
+      try spark.catalog.refreshTable(t.name)
+      catch {
+        // dropped with its directory kept: re-attached with the new file
+        case e: AnalysisException if notFound(e) => forget(spark); ensureTables(spark)
+      }
+    }
+
+  def writeJobStats(spark: SparkSession, stats: JobStats): Unit =
+    append(spark, JobStatsT, Iterator(stats))
+
+  /** Appends the error rows as one file. The iterator is read once, outside
+    * the ledger's lock, so a caller may stream rows from a Spark job. */
+  def writeErrors(spark: SparkSession, errors: Iterator[JobError]): Unit =
+    append(spark, JobErrorT, errors)
+
+  def writeBatchStats(spark: SparkSession, b: BatchStats): Unit =
+    append(spark, BatchStatsT, Iterator(b))
 
   // --- scans (A7) -------------------------------------------------------
 
@@ -133,28 +212,41 @@ object Ledger {
   def jobStats(spark: SparkSession): DataFrame =
     table(spark, JobStatsTable).drop("_version_ts")
 
-  private def table(spark: SparkSession, name: String): DataFrame =
-    withTables(spark)(spark.table(name))
+  /** `spark.table(name)`, re-creating the ledger tables if one was dropped. */
+  private def table(spark: SparkSession, name: String): DataFrame = {
+    ensureTables(spark)
+    try spark.table(name)
+    catch {
+      case e: AnalysisException if notFound(e) =>
+        forget(spark)
+        ensureTables(spark)
+        spark.table(name)
+    }
+  }
 
   // --- resume queries (C4/C5/F1) ---------------------------------------
 
   /** Most recent resumable batch for a directory (reference :186-223):
-    * status InProgress/Failed, younger than maxAgeHours, files remaining. */
+    * status InProgress/Failed, younger than maxAgeHours, files remaining.
+    * Every version row of a batch carries its directory, so the scan keeps
+    * that directory's rows and resolves last-wins on the driver: one
+    * collect, no shuffle. */
   def findResumableBatch(spark: SparkSession, inputDir: String, maxAgeHours: Int)
       : Option[BatchStats] = {
     import spark.implicits._
-    val cutoff = new java.sql.Timestamp(
-      System.currentTimeMillis() - maxAgeHours.toLong * 3600 * 1000)
-    currentBatches(spark)
-      .filter(col("DirectoryPath") === inputDir &&
-        col("BatchStatus").isin("InProgress", "Failed") &&
-        col("BatchStartTime") > lit(cutoff) &&
-        col("TotalFiles") - col("FilesProcessed") - col("FilesFailed") > 0)
-      .orderBy(col("BatchStartTime").desc)
-      .limit(1)
-      .as[BatchStats]
-      .collect()
-      .headOption
+    val cutoff = System.currentTimeMillis() - maxAgeHours.toLong * 3600 * 1000
+    val batchColumns = BatchStatsT.schema.fieldNames.filter(_ != "_version_ts").map(col)
+    table(spark, BatchStatsTable)
+      .filter(col("DirectoryPath") === inputDir)
+      .select(struct(batchColumns.toSeq: _*).as("_1"), col("_version_ts").as("_2"))
+      .as[(BatchStats, Long)]
+      .collect().toSeq
+      .groupBy(_._1.BatchJobID).values
+      .map(_.maxBy(_._2)._1)
+      .filter(b => Set("InProgress", "Failed")(b.BatchStatus) &&
+        b.BatchStartTime.getTime > cutoff &&
+        b.TotalFiles - b.FilesProcessed - b.FilesFailed > 0)
+      .maxByOption(_.BatchStartTime.getTime)
   }
 
   /** A file's last job row in a batch: its status and when that job

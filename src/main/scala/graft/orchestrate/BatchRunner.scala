@@ -140,8 +140,8 @@ object BatchRunner {
     // table the files stay strictly sequential in listing order —
     // drop_recreate/append ordering, retries, quarantine moves, and
     // per-file ledger rows are exactly the sequential behavior; only
-    // INDEPENDENT tables overlap. Ledger appends are serialized inside
-    // Ledger itself (the one cross-thread shared sink). The ledger rows
+    // INDEPENDENT tables overlap. Ledger appends publish under Ledger's
+    // own lock (the one cross-thread shared sink). The ledger rows
     // are per-file and idempotent, so resume semantics are unchanged:
     // a crash mid-parallel-batch leaves Completed rows for whatever
     // finished, and the next run processes the remainder.

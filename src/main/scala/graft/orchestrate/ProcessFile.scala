@@ -3,6 +3,7 @@ package graft.orchestrate
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.core._
 import graft.ingest.{Detect, Reader}
 import graft.analyze.{Analyze, Ddl}
@@ -101,25 +102,7 @@ object ProcessFile {
 
     recordJob(spark, config, jobRunId, start, end, filePath, table, result, batchJobId)
 
-    if (config.errorLoggingEnabled) badRows.foreach { bad =>
-      val errs = bad.select(
-        expr("uuid()").as("ErrorID"),
-        lit(jobRunId).as("JobRunID"),
-        lit(table).as("TableName"),
-        lit("").as("ColumnName"),
-        lit("constraint_violation").as("ErrorType"),
-        lit("NOT NULL constraint violated").as("ErrorMessage"),
-        current_timestamp().as("ErrorTimestamp"),
-        lit(filePath).as("SourceFile"),
-        col("_row_idx").as("RowNumber"),
-        to_json(struct(bad.columns.filterNot(_ == "_row_idx").map(ColumnRef(_)).toSeq: _*))
-          .as("RawValue"))
-      Ledger.writeErrors(spark, errs)
-      // row-level quarantine dump (reference logs/<stem>_<jobrun>.txt :1049-1058)
-      moveTargetDir(spark, filePath, "logs").foreach { logs =>
-        bad.write.mode("overwrite").json(s"$logs/${Ddl.tableName(filePath)}_$jobRunId")
-      }
-    }
+    if (config.errorLoggingEnabled) badRows.foreach(logBadRows(spark, filePath, jobRunId, table, _))
 
     // I10: file lifecycle — success ⇒ processed/, failure ⇒ error/
     // (skipped for non-final retry attempts). The load has committed, so a
@@ -135,6 +118,36 @@ object ProcessFile {
     // (src/file-to-sql-loader.py:69-101: process_<stem>_<id>.log in the
     // logs dir next to the source). Driver-side, tiny, best-effort.
     writeFileLog(spark, filePath, jobRunId, table, start, end, result, batchJobId, stranded)
+  }
+
+  /** One read of the bad rows feeds both the error ledger and the
+    * row-level quarantine dump (reference logs/<stem>_<jobrun>.txt
+    * :1049-1058). A dump line is `to_json` of the whole bad row, the
+    * generator Spark's JSON writer uses. `toLocalIterator` holds one
+    * partition at a time on the driver, within the error budget or over
+    * it, and the read runs outside the ledger's lock. */
+  private def logBadRows(spark: SparkSession, filePath: String, jobRunId: String,
+      table: String, bad: DataFrame): Unit = {
+    val data = bad.columns.filterNot(_ == "_row_idx").map(ColumnRef(_)).toSeq
+    val rows = bad.select(col("_row_idx"), to_json(struct(data: _*)),
+      to_json(struct(bad.columns.map(ColumnRef(_)).toSeq: _*))).toLocalIterator().asScala
+    if (rows.hasNext) {
+      val logged = new java.sql.Timestamp(System.currentTimeMillis())
+      val dump = moveTargetDir(spark, filePath, "logs").map { logs =>
+        val p = new Path(s"$logs/${Ddl.tableName(filePath)}_$jobRunId/part-00000.json")
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        new java.io.BufferedWriter(new java.io.OutputStreamWriter(fs.create(p, true),
+          java.nio.charset.StandardCharsets.UTF_8))
+      }
+      try Ledger.writeErrors(spark, rows.map { r =>
+        dump.foreach(_.write(r.getString(2) + "\n"))
+        JobError(ErrorID = java.util.UUID.randomUUID().toString, JobRunID = jobRunId,
+          TableName = table, ColumnName = "", ErrorType = "constraint_violation",
+          ErrorMessage = "NOT NULL constraint violated", ErrorTimestamp = logged,
+          SourceFile = filePath, RowNumber = r.getLong(0), RawValue = r.getString(1))
+      })
+      finally dump.foreach(_.close())
+    }
   }
 
   private def writeFileLog(spark: SparkSession, filePath: String, jobRunId: String,

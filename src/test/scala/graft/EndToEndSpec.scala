@@ -207,6 +207,42 @@ class EndToEndSpec extends GraftSuite {
     assert(!spark.catalog.tableExists("nn_missing"))
   }
 
+  test("the logs/ dump holds Spark's JSON-writer line for each bad row, from the ledger's read") {
+    val dir = tempDir("e2e_dump")
+    val csv = "id,price,seen,note\n" +
+      "1,1.50,2024-01-01 10:00:00,plain\n" +
+      ",2.25,2024-02-29 23:59:59,\"quote \"\"q\"\", comma\"\n" +
+      "3,,,\n" +
+      ",,2024-03-01 00:00:01,ünïcödé \\ back\n" +
+      ",9.99,,\n"
+    val f = writeFile(dir, "dump_eq.csv", csv)
+    val c = cfg.copy(transactionMode = TransactionMode.Tolerant, maxRowErrors = 10,
+      notNullColumns = Map("dump_eq" -> Seq("id")))
+    val job = ProcessFile.run(spark, f, c)
+    assert(job.result.status == "CompletedWithErrors", job.result)
+    val dump = Files.readAllLines(dir.resolve(s"logs/dump_eq_${job.jobRunId}/part-00000.json"))
+      .toArray.toSeq
+
+    // the reference: the same bad rows through Spark's JSON generator
+    val moved = dir.resolve("processed/dump_eq.csv").toString
+    val raw = graft.ingest.Reader.read(spark, moved, graft.ingest.Detect.detect(spark, moved))
+    val profile = graft.analyze.Analyze.profile(raw, Seq("id"))
+    val types = graft.analyze.Analyze.inferSchema(profile.columns, c.overridesFor("dump_eq"),
+      Seq("id")).map { case (p, t, _) => (p.name, t) }
+    val casted = graft.analyze.Analyze.castPlan(graft.ingest.Reader.withRowIndex(raw),
+      types :+ ("_row_idx" -> InferredType.BigIntType))
+    val bad = graft.load.Loader.split(casted, Seq("id"))._2
+    assert(dump == bad.toJSON.collect().toSeq)
+    assert(dump.size == 3)
+
+    val errs = spark.table(Ledger.JobErrorTable).filter(col("JobRunID") === job.jobRunId)
+      .orderBy("RowNumber").select("RowNumber", "RawValue").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(errs == bad.orderBy("_row_idx").select(col("_row_idx"),
+      to_json(struct(bad.columns.filterNot(_ == "_row_idx").map(col).toSeq: _*))).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq)
+  }
+
   /** The ledger a batch that crashed mid-run leaves behind: its batch row
     * as written at the start, and a Completed job row per finished file. */
   private def crashedBatch(dir: java.nio.file.Path, total: Int, finished: Seq[String]): String = {
